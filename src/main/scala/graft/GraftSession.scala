@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   /** The one parallelism knob: local[cpus] AND the static shuffle
     * partition count. Defaults to 32 — the driver's harness config.
-    * Every main (Verify, Bench, probes) must come through here: r16
+    * Every main (Verify, Bench, the tools) must come through here: r16
     * shipped a bench artifact silently measured at a drifted local[4]
     * because Bench carried its own builder with its own default. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -42,43 +42,7 @@ object GraftSession {
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sweepStaleWorkDirs()
+    WorkDir.reapOnce()
     spark
-  }
-
-  /** Reap abandoned `graft_*` work dirs under java.io.tmpdir (r19
-    * ADVICE): every staging helper in the query layer tags its dir
-    * with the session's applicationId so CONCURRENT processes never
-    * collide — which also means a finished session's dirs are never
-    * reclaimed by the next one's entry wipe. Most families leak KB of
-    * blobs, but q_stream_profile_inc stages a near-full copy of the
-    * filtered events per session, so long-lived boxes accumulate
-    * data-sized garbage. Swept once per session: a dir is stale when
-    * neither it nor any direct child was touched for 3 h — live runs
-    * write children continuously (bench sweeps ~10 min, full
-    * ScaleBench ≤ 50 min), so the age gate cannot catch a concurrent
-    * process's live state. */
-  @volatile private var swept = false
-  private def sweepStaleWorkDirs(): Unit = {
-    if (swept) return
-    swept = true
-    val cutoff = System.currentTimeMillis() - 3L * 3600 * 1000
-    def lastTouched(d: java.io.File): Long =
-      (d.lastModified() +: Option(d.listFiles())
-        .getOrElse(Array.empty[java.io.File]).map(_.lastModified()).toSeq).max
-    Option(new java.io.File(System.getProperty("java.io.tmpdir"))
-        .listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("graft_") &&
-        lastTouched(f) < cutoff)
-      .foreach { f =>
-        try {
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).getOrElse(Array.empty[java.io.File])
-              .foreach(rm)
-            x.delete(); ()
-          }
-          rm(f)
-        } catch { case _: Throwable => () }
-      }
   }
 }

@@ -892,8 +892,9 @@ object Dedup {
     * AQE-skew-SPLITTABLE where a `row_number` window partition is not
     * (round 14 shipped the window form; its hot gram would have
     * single-tasked — VERDICT r14 #5). The legacy window form stays
-    * behind `keepFirstViaWindow` for the parity spec and the planted
-    * hot-gram benchmark only. Everything
+    * behind `keepFirstViaWindow` for the parity spec only (the planted
+    * hot-gram timings of both forms are in PERF.md "Round-15: scrub
+    * keep-first de-skewed"). Everything
     * AFTER the flag filter rides the (small) flagged subset: the
     * island merge is a per-doc window over flagged rows only, and the
     * rebuild joins the bounded interval list back to the doc frame
@@ -920,8 +921,8 @@ object Dedup {
 
   /** Flag-bearing impl of [[scrubRepeatedSpans]]; `private[graft]` on
     * purpose — the legacy window keep-first exists for the parity spec
-    * and the planted hot-gram probe only, and must not be reachable
-    * from user code (flipping it at scale re-opens r14 #5). */
+    * only, and must not be reachable from user code (flipping it at
+    * scale re-opens r14 #5). */
   private[graft] def scrubRepeatedSpansImpl(
       df: DataFrame, idCol: String, text: Column,
       k: Int, hashGrams: Boolean, keepFirstViaWindow: Boolean)

@@ -63,11 +63,13 @@ private[operators] object IndexStore {
     * append/compact/read (the 1-row collect): two driver round-trips
     * per blob op at ANY scale, which r20's job counting measured as
     * the lifecycle rows' dominant cost (guide §2.4 — remove scheduler
-    * round-trips outright). Values are stringified scalars; each
-    * operator owns its typed parse. Double round-trips exactly
-    * (Double.toString is shortest-round-trip by the Java spec). */
+    * round-trips outright). Values are numbers, stored stringified;
+    * each operator owns its typed parse. Typing them `AnyVal` is what
+    * lets [[params]] read the file with a regex: no value can contain
+    * a quote. Double round-trips exactly (Double.toString is
+    * shortest-round-trip by the Java spec). */
   def writeParams(spark: SparkSession, path: String,
-                  kv: (String, Any)*): Unit = {
+                  kv: (String, AnyVal)*): Unit = {
     val p = new Path(s"$path/params.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val json = kv.map { case (k, v) => s""""$k":"$v"""" }
@@ -128,15 +130,15 @@ private[operators] object IndexStore {
   /** Union of the named columns across base + every delta (optionally
     * under a per-batch `subdir`, for operators that bank more than one
     * structure per batch) — as ONE multi-path parquet scan, not a
-    * per-dir union: the r18 ProbeIndexScale run measured the
-    * union-of-D-relations form paying ~0.14 s of per-relation plan/scan
-    * setup per banked batch (52 s to merge 365 KB-sized CMS blobs),
-    * which made load time grow with BATCH COUNT even though the data
-    * is KB-sized. A single relation over D paths plans once and scans
-    * the D files in one stage. Batch dirs are unpartitioned plain
-    * parquet (every writer in this family), so multi-path reading is
-    * safe; every batch shares the writer's schema and `select`
-    * normalizes column order. */
+    * per-dir union: PERF.md "Round-18 (cont. 3): the blob-count load
+    * contract" measured the union-of-D-relations form paying ~0.14 s
+    * of per-relation plan/scan setup per banked batch (52 s to merge
+    * 365 KB-sized CMS blobs), which made load time grow with BATCH
+    * COUNT even though the data is KB-sized. A single relation over D
+    * paths plans once and scans the D files in one stage. Batch dirs
+    * are unpartitioned plain parquet (every writer in this family), so
+    * multi-path reading is safe; every batch shares the writer's
+    * schema and `select` normalizes column order. */
   def unionBatches(spark: SparkSession, path: String, subdir: String,
                    cols: Seq[String],
                    excludeTags: Set[String] = Set.empty): DataFrame = {

@@ -750,19 +750,15 @@ object CoreQueries {
 
   def joinBucketed(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Bucketing
-    val tag = (s.sparkContext.applicationId + "_" +
-      Integer.toHexString(dir.hashCode)).replaceAll("[^a-zA-Z0-9]", "_")
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_buckets_$tag").toString
+    val tag = graft.WorkDir.tag(s, dir)
+    val base = graft.WorkDir.path("buckets", tag)
     val oTbl = s"graft_orders_bucketed_$tag"
     val cTbl = s"graft_customer_bucketed_$tag"
     if (bucketStaged.add(tag)) {
       try {
         s.sql(s"DROP TABLE IF EXISTS $oTbl")
         s.sql(s"DROP TABLE IF EXISTS $cTbl")
-        val basePath = new org.apache.hadoop.fs.Path(base)
-        basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(basePath, true)
+        graft.WorkDir.wipe(s, base)
         Bucketing.writeBucketed(
           t(s, dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
           oTbl, s"$base/orders", buckets = 8, key = "o_custkey",

@@ -438,8 +438,8 @@ object DedupQueries {
     * recall is certain. Non-empty at every SF (planted dup pairs
     * straddle the parity split).
     *
-    * Candidate-vs-exact-oracle equivalence margin, MEASURED (tools/
-    * Probe bandmargin; the est_jaccard >= 0.45 prune needs >= 8 of 16
+    * Candidate-vs-exact-oracle equivalence margin, MEASURED (PERF.md
+    * "Removed tools"; the est_jaccard >= 0.45 prune needs >= 8 of 16
     * agreeing bands): the true pairs (bigram J >= 0.9) agree on
     * min 15 / 15 / 16 of 16 bands at sf0.001 / 0.01 / 0.1 — nearly
     * double the floor, and deterministic facts of the seeded hash
@@ -489,12 +489,7 @@ object DedupQueries {
     // one per-session base dir, REPLACED per call (the joinBucketed
     // protocol): reruns never accumulate /tmp data, and the appId tag
     // isolates concurrent harness processes
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_screen_$tag").toString
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(basePath, true)
+    val base = graft.WorkDir.fresh(s, "screen")
     val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))
     def addFile(df: DataFrame, name: String): Unit = {

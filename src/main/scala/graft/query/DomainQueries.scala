@@ -123,11 +123,7 @@ object DomainQueries {
       .select("ip8", "ip16", "ip24", "ipAddress", "ip_int",
         "p1", "p2", "p3", "p4", "p5", "p6", "p7",
         "country", "city", "asn", "as_name")
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_serving_$tag").toString
-    val hp = new org.apache.hadoop.fs.Path(path)
-    hp.getFileSystem(s.sparkContext.hadoopConfiguration).delete(hp, true)
+    val path = graft.WorkDir.fresh(s, "serving")
     // BUILD: directory-partitioned on the partition key (the pruning
     // unit), clustering-sorted within files (the streaming-read order)
     rdns.repartition(col("ip8"))
@@ -338,9 +334,7 @@ object DomainQueries {
     val cutoff = d.agg(date_sub(max("day"), 4)).collect()(0).getDate(0)
     val obs = d.filter(col("day") >= lit(cutoff))
       .select("domain", "obs_ts")
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_replay_$tag").toString
+    val base = graft.WorkDir.path(s, "replay")
     graft.streaming.StreamingIngest.replayDailyDedupFiles(s, obs, base)
       .select(col("domain").cast("long").as("user_id"),
         date_format(col("obs_ts"), "yyyy-MM-dd").as("first_day"))

@@ -488,11 +488,7 @@ object EventQueries {
       .select(col("event_type"), col("user_id"))
       .localCheckpoint(eager = false)
     val half = pmod(xxhash64(col("user_id")), lit(2L))
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_hllidx_$tag").toString
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val path = graft.WorkDir.fresh(s, "hllidx")
     SketchOps.saveSketchIndex(src.filter(half === 0),
       col("event_type"), col("user_id"), path)
     SketchOps.appendSketchIndex(s, path, src.filter(half === 1),
@@ -557,11 +553,7 @@ object EventQueries {
     val (minD, maxD) = (b.getLong(0), b.getLong(1))
     val histEnd = minD + 2L * (maxD - minD + 1L) / 3L
     val histMid = minD + (histEnd - minD) / 2L
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_bloomidx_$tag").toString
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val path = graft.WorkDir.fresh(s, "bloomidx")
     // capacity DERIVED from the data via the single-sourced rule
     // (BloomIndex.derivedCapacity — r18 verdict #3 killed the inline
     // twin of PipelineQueries' copy that lived here)

@@ -244,10 +244,8 @@ object MediaDedupQueries {
     val corpus = screenFixtures(s, docs(s, dir).filter(col("doc_id") < 100))
     val batch = screenFixtures(s,
       docs(s, dir).filter(col("doc_id") >= 100 && col("doc_id") < 200))
-    val tag = (s.sparkContext.applicationId + "_" +
-      Integer.toHexString(dir.hashCode)).replaceAll("[^a-zA-Z0-9]", "_")
-    val idxDir = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_sigidx_$tag").toString
+    val tag = graft.WorkDir.tag(s, dir)
+    val idxDir = graft.WorkDir.path("sigidx", tag)
     if (sigStaged.add(tag))
       Multimodal.saveSignatureIndex(Multimodal.mediaHashes(corpus), idxDir)
     Multimodal.screenMedia(batch, Multimodal.loadSignatureIndex(s, idxDir),
@@ -322,10 +320,8 @@ object MediaDedupQueries {
     val corpus = screenFixtures(s, docs(s, dir).filter(col("doc_id") < 100))
     val batch = screenFixtures(s,
       docs(s, dir).filter(col("doc_id") >= 100 && col("doc_id") < 200))
-    val tag = (s.sparkContext.applicationId + "_" +
-      Integer.toHexString(dir.hashCode)).replaceAll("[^a-zA-Z0-9]", "_")
-    val idxDir = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_sigidx_$tag").toString
+    val tag = graft.WorkDir.tag(s, dir)
+    val idxDir = graft.WorkDir.path("sigidx", tag)
     if (sigStaged.add(tag))
       Multimodal.saveSignatureIndex(Multimodal.mediaHashes(corpus), idxDir)
     Multimodal.screenMediaMih(batch, Multimodal.loadSignatureIndex(s, idxDir),
@@ -352,12 +348,7 @@ object MediaDedupQueries {
     import java.nio.file.{Files, Paths}
     import graft.operators.Multimodal
     val all = screenFixtures(s, docs(s, dir).filter(col("doc_id") < 200))
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_mediastream_$tag").toString
-    val basePath = new org.apache.hadoop.fs.Path(base)
-    basePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(basePath, true)
+    val base = graft.WorkDir.fresh(s, "mediastream")
     val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     val idx = s"$base/index"
     Files.createDirectories(Paths.get(in))

@@ -82,18 +82,6 @@ object PipelineQueries {
     * they keep AQE; the Bloom/HLL/CMS/quantile-sketch rows keep the
     * scope (measured -0.1 to -1.2 s each at the same box-hour). */
 
-  /** A fresh per-session tmp dir (wiped on entry — reruns never
-    * accumulate), tagged by applicationId against concurrent harness
-    * processes: the established `_inc`-query protocol. */
-  private def freshBase(s: SparkSession, name: String): String = {
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_${name}_$tag").toString
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    base
-  }
-
   /** THE FLAGSHIP COMPOSITION — one simulated daily run against
     * yesterday's persisted state, all three indexes, one gated result:
     *
@@ -134,7 +122,7 @@ object PipelineQueries {
     val hist = src.filter(col("day") < histEnd)
     val today = src.filter(col("day") >= histEnd)
 
-    val base = freshBase(s, "dailyinc")
+    val base = graft.WorkDir.fresh(s, "dailyinc")
     val bloomPath = s"$base/bloom"
     val hllPath = s"$base/hll"
     val cmsPath = s"$base/cms"
@@ -291,7 +279,7 @@ object PipelineQueries {
     // today splits at its own midpoint: file 1 | restart | file 2
     val todayMid = histEnd + (maxD - histEnd + 1L) / 2L
 
-    val base = freshBase(s, "bloomscreen")
+    val base = graft.WorkDir.fresh(s, "bloomscreen")
     val indexPath = s"$base/idx"
     val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     Files.createDirectories(Paths.get(in))
@@ -381,7 +369,7 @@ object PipelineQueries {
     import graft.operators.HistIndex
     val src = oneScan(ev(s, dir).filter(col("value").isNotNull)
       .select(col("event_id"), col("value")))
-    val path = s"${freshBase(s, "histidx")}/idx"
+    val path = s"${graft.WorkDir.fresh(s, "histidx")}/idx"
     val third = pmod(col("event_id"), lit(3L))
     HistIndex.saveHistIndex(src.filter(third === 0), col("value"), path,
       lo = 0.0, width = 50.0, nBins = 16)
@@ -425,7 +413,7 @@ object PipelineQueries {
     import graft.operators.HistIndex
     val src = oneScan(ev(s, dir).filter(col("value").isNotNull)
       .select(col("event_id"), col("value")))
-    val path = s"${freshBase(s, "histq")}/idx"
+    val path = s"${graft.WorkDir.fresh(s, "histq")}/idx"
     val third = pmod(col("event_id"), lit(3L))
     HistIndex.saveHistIndex(src.filter(third === 0), col("value"), path,
       lo = 0.0, width = 50.0, nBins = 16)
@@ -471,7 +459,7 @@ object PipelineQueries {
     val src = oneScan(ev(s, dir)
       .filter(col("value").isNotNull && col("event_type").isNotNull)
       .select(col("event_id"), col("event_type"), col("value")))
-    val path = s"${freshBase(s, "histseg")}/idx"
+    val path = s"${graft.WorkDir.fresh(s, "histseg")}/idx"
     val third = pmod(col("event_id"), lit(3L))
     HistIndex.saveHistIndexSeg(src.filter(third === 0),
       col("event_type"), col("value"), path,
@@ -520,7 +508,7 @@ object PipelineQueries {
     val src = oneScan(ev(s, dir)
       .filter(col("value").isNotNull && col("event_type").isNotNull)
       .select(col("event_id"), col("event_type"), col("value")))
-    val path = s"${freshBase(s, "histqseg")}/idx"
+    val path = s"${graft.WorkDir.fresh(s, "histqseg")}/idx"
     val third = pmod(col("event_id"), lit(3L))
     HistIndex.saveHistIndexSeg(src.filter(third === 0),
       col("event_type"), col("value"), path,
@@ -595,7 +583,7 @@ object PipelineQueries {
     val b = src.agg(min("day"), max("day")).collect()(0)
     val mid = b.getLong(0) + (b.getLong(1) - b.getLong(0) + 1L) / 2L
 
-    val base = freshBase(s, "profstream")
+    val base = graft.WorkDir.fresh(s, "profstream")
     val in = s"$base/in"; val ckpt = s"$base/ckpt"
     Files.createDirectories(Paths.get(in))
     val bloomPath = s"$base/bloom"; val hllPath = s"$base/hll"
@@ -735,7 +723,7 @@ object PipelineQueries {
     import graft.operators.QuantileIndex
     val src = oneScan(ev(s, dir).filter(col("value").isNotNull)
       .select(col("event_id"), col("value")))
-    val base = freshBase(s, "qsketch")
+    val base = graft.WorkDir.fresh(s, "qsketch")
     val path = s"$base/idx"; val cPath = s"$base/idx_compact"
     val third = pmod(col("event_id"), lit(3L))
     QuantileIndex.saveQuantileIndex(src.filter(third === 0),
@@ -815,7 +803,7 @@ object PipelineQueries {
     val hist = src.filter(col("day") < histEnd)
     val today = src.filter(col("day") >= histEnd)
 
-    val base = freshBase(s, "dailyprod")
+    val base = graft.WorkDir.fresh(s, "dailyprod")
     val bloomPath = s"$base/bloom"; val hllPath = s"$base/hll"
     val cmsPath = s"$base/cms"
     val capacity = derivedCapacity(src)

@@ -86,10 +86,11 @@ object QueryOps {
     * aggregate executor disk → `Rescan`. */
   /** How [[funnel]] materializes its one-scan event slice.
     *
-    * Measured crossover (ProbeFunnelModes, forced min-of-2, local[32],
-    * VERDICT r14 #8): on the 10×/100× entity-scaled event fixtures the
-    * funnel leg runs LocalCheckpoint 2.23 s / 2.76 s, DiskPersist
-    * 2.71 s / 2.66 s, Rescan 1.89 s / 2.22 s. Reading the numbers:
+    * Measured crossover (PERF.md "Round-15 (cont.): FunnelScan mode
+    * certification", forced min-of-2, local[32]): on the 10×/100×
+    * entity-scaled event fixtures the funnel leg runs LocalCheckpoint
+    * 2.23 s / 2.76 s, DiskPersist 2.71 s / 2.66 s, Rescan 1.89 s /
+    * 2.22 s. Reading the numbers:
     * with the source parquet page-cached (any local fixture), Rescan's
     * k−1 re-reads are nearly free and both persist modes pay a net
     * materialization premium — so the persist modes are INSURANCE

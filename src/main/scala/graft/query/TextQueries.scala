@@ -440,11 +440,7 @@ object TextQueries {
       .localCheckpoint(eager = false)
     val toks = tokArrays.select(col("doc_id"),
       explode(col("__toks")).as("term"))
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_cmsidx_$tag").toString
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val path = graft.WorkDir.fresh(s, "cmsidx")
     val half = pmod(col("doc_id"), lit(2L))
     CmsIndex.saveCmsIndex(toks.filter(half === 0), col("term"), path)
     CmsIndex.appendCmsIndex(s, path, toks.filter(half === 1),

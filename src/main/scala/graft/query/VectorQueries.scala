@@ -124,8 +124,8 @@ object VectorQueries {
     * coarse quantizer differs per SF). Every emitted row is scored:
     *
     *  - `in_exact_top40`: the neighbor sits in the brute-force exact
-    *    top-40 of its query. Measured margin (tools/Probe ivfrank):
-    *    max exact-rank of any emitted neighbor is 13 / 12 / 12 at
+    *    top-40 of its query. Measured margin (PERF.md "Removed
+    *    tools"): max exact-rank of any emitted neighbor is 13 / 12 / 12 at
     *    sf0.001 / 0.01 / 0.1 — the 40 floor is 3x the worst case, and
     *    the seeded pipeline is deterministic per SF, so these are
     *    facts, not probabilities.
@@ -141,12 +141,12 @@ object VectorQueries {
   /** The multi-probe LSH path under the SAME closed-form oracle as
     * [[dedupEmbedding]]: Hamming<=1 probing lets 12 tables match the
     * exact threshold join that exact-bucket LSH needs 32 tables for.
-    * Measured (tools/Probe multiprobe): equality holds at all three
-    * SFs (7 / 14 / 144 pairs, zero missed), and the analytic floor is
-    * wide — a marginal pair at cos 0.455 agrees with a probed 3-plane
-    * table w.p. ~0.73 vs ~0.28 unprobed, so 12 probed tables put the
-    * expected miss near 2e-7 where 12 unprobed tables missed ~2% of
-    * marginal pairs (the r3 measurement that forced 32). */
+    * Measured (PERF.md "Round-6: 10x scale sweep"): equality holds at
+    * all three SFs (7 / 14 / 144 pairs, zero missed), and the analytic
+    * floor is wide — a marginal pair at cos 0.455 agrees with a probed
+    * 3-plane table w.p. ~0.73 vs ~0.28 unprobed, so 12 probed tables
+    * put the expected miss near 2e-7 where 12 unprobed tables missed
+    * ~2% of marginal pairs (the r3 measurement that forced 32). */
   def dedupEmbeddingProbe(s: SparkSession, dir: String): DataFrame =
     Dedup.embeddingNearDups(embs(s, dir).filter(col("vec_id") < 1000),
         "vec_id", "embedding",
@@ -214,9 +214,7 @@ object VectorQueries {
     val fresh0 = Similarity.buildIvfIndex(sub, "vec_id", "embedding",
       nlist = 8)
     val fresh = fresh0.copy(assigned = fresh0.assigned.localCheckpoint(false))
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_ivfidx_$tag").toString
+    val path = graft.WorkDir.path(s, "ivfidx")
     Similarity.saveIvfIndex(fresh, path)
     val loaded = Similarity.loadIvfIndex(s, path)
     def search(ix: Similarity.IvfIndex) =
@@ -265,11 +263,7 @@ object VectorQueries {
     val fresh0 = Similarity.buildIvfIndex(sub, "vec_id", "embedding",
       nlist = 8)
     val fresh = fresh0.copy(assigned = fresh0.assigned.localCheckpoint(false))
-    val tag = s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"), s"graft_ivfappend_$tag").toString
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    val path = graft.WorkDir.fresh(s, "ivfappend")
     Similarity.saveIvfIndex(fresh, path)
     Similarity.appendIvfIndex(s, path, batch, "vec_id", "embedding", "b0")
     Similarity.appendIvfIndex(s, path, batch, "vec_id", "embedding", "b0")

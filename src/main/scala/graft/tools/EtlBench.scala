@@ -1,6 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
 import graft.GraftSession
 import graft.etl.Migrator
 import graft.sources.{Dims, OrderedSink}
@@ -22,7 +21,7 @@ object EtlBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 10000000L
     val spark = GraftSession.getOrCreate("graft-etl-bench")
-    val tmp = Files.createTempDirectory("graft-etl-bench").toString
+    val tmp = graft.WorkDir.fresh(spark, "etl_bench")
     val inDir = s"$tmp/in"
     val outDir = s"$tmp/out"
 

@@ -361,9 +361,7 @@ object ExplainDump {
     def streamProfilePlan(title: String): String = {
       import org.apache.spark.sql.functions.{col => c, datediff, lit,
         to_date}
-      val base = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_explain_profstream_${System.nanoTime()}").toString
+      val base = graft.WorkDir.fresh(spark, "explain_profstream")
       val in = s"$base/in"
       Files.createDirectories(Paths.get(in))
       val src = graft.sources.Tables.loadEventsTs(spark, sfDir)

@@ -224,9 +224,7 @@ object Scale100 {
           pmod(col("id") * 37L, lit(800L)).cast("double").as("v"),
           pmod(col("id"), lit(3L)).as("third"))
       def buildIdx(nSegs: Int): String = {
-        val path = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_scale100_histseg_${nSegs}_${System.nanoTime()}").toString
+        val path = graft.WorkDir.fresh(spark, s"scale100_histseg_$nSegs")
         val df = segEvents(nSegs)
         HistIndex.saveHistIndexSeg(df.filter(col("third") === 0),
           col("seg"), col("v"), path, lo = 0.0, width = 50.0, nBins = 16)

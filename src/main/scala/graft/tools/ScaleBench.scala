@@ -115,12 +115,13 @@ object ScaleBench {
     // is one explode+groupBy to a dim-bounded table, scoring is ONE
     // codegen'd expression, so near-linear is the expectation (the
     // _sub variant adds the char-gram fan-out, ~4x features/doc); and
-    // the persisted-index certifications — probe evidence lives in
-    // ProbeIndexScale, these rows make the whole save/append/load/
-    // certify cycle regression-gated (each runs its exact comparison
-    // legs too, so the row is certification cost, not just index
-    // cost). q_screen_ingest_bloom stays out: its file-stream replay
-    // harness (stage + checkpoint + restart) is fixture, not plan.
+    // the persisted-index certifications — the blob-vs-rescan curve
+    // lives in PERF.md "Round-17 (cont. 3)", these rows make the
+    // whole save/append/load/certify cycle regression-gated (each
+    // runs its exact comparison legs too, so the row is certification
+    // cost, not just index cost). q_screen_ingest_bloom stays out: its
+    // file-stream replay harness (stage + checkpoint + restart) is
+    // fixture, not plan.
     "q_quality_classifier", "q_quality_classifier_sub",
     "q_segment_distinct_inc", "q_seen_before_inc", "q_heavy_hitters_inc",
     "q_daily_inc_pipeline",
@@ -274,6 +275,84 @@ object ScaleBench {
     (nMeta, tMeta, nFeat, (System.nanoTime() - t1) / 1e9)
   }
 
+  // --- index-compaction row: a FIXED planted shape (D daily batches of
+  // `perDay` rows, day 0 saved as the base index, days 1..D-1 appended
+  // as `d<day>`), so the row is comparable across rounds regardless of
+  // sfDir/k. PERF.md "Round-17 (cont. 3): the persisted-index contract,
+  // measured" has the blob-load vs rescan curve this shape came from.
+
+  /** One synthetic banked day. */
+  def plantedDay(spark: SparkSession, perDay: Long, d: Int): DataFrame =
+    spark.range(d * perDay, (d + 1) * perDay)
+      .select(
+        concat(lit("t"), pmod(col("id") * 2654435761L, lit(100000L)))
+          .as("term"),
+        pmod(col("id") * 40503L, lit(3000000L)).as("uid"),
+        // heavy-tailed value stream for the quantile-sketch member —
+        // pinning NO range is its whole point, so give it one a
+        // HistIndex bin spec could not anticipate
+        (pmod(col("id") * 69621L, lit(1000000L)).cast("double") *
+          pmod(col("id") * 69621L, lit(1000000L)).cast("double") /
+          lit(1e4)).as("v"))
+
+  /** Build base + (days-1) deltas of the CMS, Bloom and quantile
+    * families under `base`; returns (cmsPath, bloomPath, quantPath). */
+  def buildIndexes(spark: SparkSession, base: String, perDay: Long,
+                   days: Int): (String, String, String) = {
+    import graft.operators.{BloomIndex, CmsIndex, QuantileIndex}
+    val (cmsPath, bloomPath, quantPath) =
+      (s"$base/cms", s"$base/bloom", s"$base/quant")
+    def day(d: Int) = plantedDay(spark, perDay, d)
+    CmsIndex.saveCmsIndex(day(0), col("term"), cmsPath)
+    BloomIndex.saveBloomIndex(day(0), col("uid"), bloomPath,
+      expectedItems = 3000000L)
+    QuantileIndex.saveQuantileIndex(day(0), col("v"), quantPath)
+    for (d <- 1 until days) {
+      CmsIndex.appendCmsIndex(spark, cmsPath, day(d), col("term"), s"d$d")
+      BloomIndex.appendBloomIndex(spark, bloomPath, day(d),
+        col("uid"), s"d$d")
+      QuantileIndex.appendQuantileIndex(spark, quantPath, day(d),
+        col("v"), s"d$d")
+    }
+    (cmsPath, bloomPath, quantPath)
+  }
+
+  private def secs(f: => Unit): Double = {
+    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Compact-at-D + post-compaction-load seconds for one exact (CMS),
+    * one idempotent (Bloom) and the quantile family, against
+    * already-built index paths; compacted copies land under
+    * `scratch`. */
+  def compactionTimings(spark: SparkSession, cmsPath: String,
+                        bloomPath: String, quantPath: String,
+                        scratch: String): Seq[(String, Double)] = {
+    import graft.operators.{BloomIndex, BloomJoin, CmsIndex, QuantileIndex}
+    val todayKeys = spark.range(1000000)
+      .select(pmod(col("id") * 48271L, lit(3000000L)).as("uid"))
+    val (cmsC, bloomC, quantC) = (s"$scratch/cms_compact",
+      s"$scratch/bloom_compact", s"$scratch/quant_compact")
+    def noop(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    Seq(
+      "compact_cms" -> secs(CmsIndex.compactCmsIndex(spark, cmsPath, cmsC)),
+      "load_cms_post" -> secs {
+        val (sk, _) = CmsIndex.loadMergedSketch(spark, cmsC)
+        noop(CmsIndex.estimateTerms(CmsIndex.loadCandidates(spark, cmsC), sk))
+      },
+      "compact_bloom" ->
+        secs(BloomIndex.compactBloomIndex(spark, bloomPath, bloomC)),
+      "load_bloom_post" -> secs {
+        val (blob, _) = BloomIndex.loadMergedFilter(spark, bloomC)
+        noop(todayKeys.filter(!BloomJoin.mightContain(blob, col("uid"))))
+      },
+      "compact_quant" ->
+        secs(QuantileIndex.compactQuantileIndex(spark, quantPath, quantC)),
+      "load_quant_post" -> secs(noop(
+        QuantileIndex.quantiles(spark, quantC, Seq(0.5, 0.95, 0.99)))))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
@@ -409,19 +488,13 @@ object ScaleBench {
         }
 
     // Index-compaction regression row (r18 verdict #4): compact-at-D
-    // cost + post-compaction load for one exact (CMS) and one
-    // idempotent (Bloom) family, on a FIXED planted shape (D=32 daily
-    // batches of 500k rows, the ProbeIndexScale generator) so the row
-    // is comparable across rounds regardless of sfDir/k — compaction
-    // is blob-count work and must stay seconds-flat like load.
+    // cost + post-compaction load on the planted shape above at D=32
+    // daily batches of 500k rows — compaction is blob-count work and
+    // must stay seconds-flat like load.
     val compactRow = {
-      val cbase = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_scale_compact_${System.nanoTime()}").toString
-      val (cms, _, bloom, quant) =
-        ProbeIndexScale.buildIndexes(spark, cbase, 500000L, 32)
-      val t = ProbeIndexScale.compactionTimings(spark, cms, bloom, cbase) ++
-        ProbeIndexScale.quantCompactionTimings(spark, quant, cbase)
+      val cbase = graft.WorkDir.fresh(spark, "scale_compact")
+      val (cms, bloom, quant) = buildIndexes(spark, cbase, 500000L, 32)
+      val t = compactionTimings(spark, cms, bloom, quant, cbase)
       println(t.map { case (k, v) => f"$k=$v%.2fs" }
         .mkString("[scale-bench] index_compaction_d32: ", " ", ""))
       t

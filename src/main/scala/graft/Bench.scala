@@ -105,31 +105,15 @@ object Bench {
     // per-query UUID checkpoint dirs don't accumulate in tmpfs
     val ckptBase =
       if (new java.io.File("/dev/shm").isDirectory)
-        Some(s"/dev/shm/graft_bench_ckpt_${spark.sparkContext.applicationId
-          .replaceAll("[^a-zA-Z0-9]", "_")}")
+        Some(s"/dev/shm/graft_bench_ckpt_${WorkDir.tag(spark)}")
       else None
-    def wipeCkpt(): Unit = ckptBase.foreach { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-      ()
-    }
+    def wipeCkpt(): Unit = ckptBase.foreach(WorkDir.wipe(spark, _))
     ckptBase.foreach { dir =>
       // crashed/killed sweeps leak their appId-suffixed tmpfs dirs
       // forever (r18 ADVICE — the old fixed path was self-cleaning on
-      // the next entry wipe): sweep stale siblings older than 3 h on
-      // entry so RAM-backed garbage can't accumulate
-      val cutoff = System.currentTimeMillis() - 3L * 3600 * 1000
-      Option(new java.io.File("/dev/shm").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith("graft_bench_ckpt_") &&
-          f.lastModified() < cutoff)
-        .foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-          ()
-        }
+      // the next entry wipe): reap stale siblings on entry so
+      // RAM-backed garbage can't accumulate
+      WorkDir.reap(new java.io.File("/dev/shm"))
       wipeCkpt()
       spark.conf.set("spark.sql.streaming.checkpointLocation", dir)
     }
@@ -317,13 +301,13 @@ object Bench {
       // CPU sample cannot see.
       val c1 = calibOnce(100000000L)
       val b1 = bwOnce()
-      // heartbeat (r19 ADVICE): the stale-sibling sweep above keys
-      // off base-dir mtime, which only moves on direct-child
-      // create/delete — a long-lived sweep that goes 3 h without a
-      // new per-query checkpoint child would look stale to a
-      // CONCURRENT bench's entry sweep and lose live checkpoints
-      // mid-run. Touching our own base dir once per query keeps a
-      // live sweep's mtime always < 3 h old.
+      // heartbeat (r19 ADVICE): the stale-sibling reap above keys
+      // off the mtimes of the base dir and its direct children, which
+      // only move on create/delete one level down — a long-lived
+      // sweep that goes 3 h without a new per-query checkpoint child
+      // would look stale to a CONCURRENT bench's entry reap and lose
+      // live checkpoints mid-run. Touching our own base dir once per
+      // query keeps a live sweep's mtime always < 3 h old.
       ckptBase.foreach(d =>
         new java.io.File(d).setLastModified(System.currentTimeMillis()))
       (runs, l, c1, b1)

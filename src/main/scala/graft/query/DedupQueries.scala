@@ -480,7 +480,7 @@ object DedupQueries {
     * oracle recomputes closed-form. Replay harness over a bounded
     * corpus (the driver carves and stages it), not a bulk path. */
   def screenIngestReplay(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import graft.streaming.Replay.stageFile
     val d = docs(s, dir).filter(col("doc_id") < 1000)
       .select("doc_id", "text", "lang")
     val index = Dedup.buildMinhashIndex(
@@ -491,15 +491,6 @@ object DedupQueries {
     // isolates concurrent harness processes
     val base = graft.WorkDir.fresh(s, "screen")
     val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
-    Files.createDirectories(Paths.get(in))
-    def addFile(df: DataFrame, name: String): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(s"$in/$name"))
-      ()
-    }
     def screen(): Unit =
       graft.streaming.StreamingIngest.screenIngest(
         s.readStream.schema("doc_id LONG, text STRING, lang STRING")
@@ -507,9 +498,9 @@ object DedupQueries {
         index, threshold = 0.9, "doc_id", "text", ckpt, out)
         .awaitTermination()
     val odd = d.filter(col("doc_id") % 2 === 1)
-    addFile(odd.filter(col("doc_id") < 500), "f1.parquet")
+    stageFile(odd.filter(col("doc_id") < 500), in, "f1.parquet")
     screen()
-    addFile(odd.filter(col("doc_id") >= 500), "f2.parquet")
+    stageFile(odd.filter(col("doc_id") >= 500), in, "f2.parquet")
     screen() // restart: only the new file may be (re)processed
     // the result reads back from already-written parquet — no lineage
     // on the index, so it can release immediately and nothing needs

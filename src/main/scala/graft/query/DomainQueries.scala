@@ -367,7 +367,7 @@ object DomainQueries {
       .filter(col("user_id") < 100)
       .select(col("user_id"), col("us"), col("event_id"))
       // certification harness, NOT the production entry: the bounded
-      // (user_id < 100) slice is collected only to stage MemoryStream
+      // (user_id < 100) slice is collected only to stage Replay.input
       // micro-batches; production code feeds a real streaming Dataset
       // straight into SessionStream.sessionize
       .collect()
@@ -405,7 +405,7 @@ object DomainQueries {
       .filter(col("user_id") < 300)
       .select(col("us"), col("event_id"))
       // certification harness, NOT the production entry: the bounded
-      // slice is collected only to stage MemoryStream micro-batches;
+      // slice is collected only to stage Replay.input micro-batches;
       // production code runs WindowedStream's aggregation over a real
       // readStream source
       .collect()
@@ -481,7 +481,7 @@ object DomainQueries {
     import graft.streaming.StreamJoin
     // certification harness, NOT the production entry: the bounded
     // (user_id < 150) slice is collected only to stage the two
-    // MemoryStreams in event-time lockstep (ONE scan for both sides);
+    // Replay.inputs in event-time lockstep (ONE scan for both sides);
     // production code joins two real streaming Datasets via
     // StreamJoin.viewPurchase
     val rows = Tables.loadEventsTs(s, dir)
@@ -520,7 +520,7 @@ object DomainQueries {
     import graft.streaming.StreamJoin
     // certification harness, NOT the production entry: the bounded
     // (user_id < 150) slice is collected only to stage the two
-    // MemoryStreams in event-time lockstep (ONE scan for both sides);
+    // Replay.inputs in event-time lockstep (ONE scan for both sides);
     // production code joins two real streaming Datasets via
     // StreamJoin.viewPurchase
     val rows = Tables.loadEventsTs(s, dir)
@@ -646,7 +646,7 @@ object DomainQueries {
   def streamCdc(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.CdcStream
     // certification harness, NOT the production entry: the bounded
-    // slice is collected only to stage MemoryStream micro-batches;
+    // slice is collected only to stage Replay.input micro-batches;
     // production code feeds a real change stream into CdcStream.upsert
     val changes = Tables.loadEventsTs(s, dir)
       .filter(col("user_id") < 400)

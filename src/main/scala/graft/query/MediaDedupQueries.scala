@@ -345,32 +345,23 @@ object MediaDedupQueries {
     * f2 vs base UNION clean(f1) — so the gate certifies exactly-once
     * progress AND index growth, not just one join. */
   def mediaScreenStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import graft.streaming.Replay.stageFile
     import graft.operators.Multimodal
     val all = screenFixtures(s, docs(s, dir).filter(col("doc_id") < 200))
     val base = graft.WorkDir.fresh(s, "mediastream")
     val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     val idx = s"$base/index"
-    Files.createDirectories(Paths.get(in))
     Multimodal.saveSignatureIndex(
       Multimodal.mediaHashes(all.filter(col("media_id") < 100)),
       s"$idx/batch=base")
-    def addFile(df: DataFrame, name: String): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(s"$in/$name"))
-      ()
-    }
     def screen(): Unit =
       graft.streaming.StreamingIngest.screenMediaIngest(
         s.readStream.schema(Multimodal.mediaSchema).parquet(in),
         idx, maxDist = 8, ckpt, out).awaitTermination()
-    addFile(all.filter(col("media_id") >= 100 && col("media_id") < 150)
-      .toDF(), "f1.parquet")
+    stageFile(all.filter(col("media_id") >= 100 && col("media_id") < 150)
+      .toDF(), in, "f1.parquet")
     screen()
-    addFile(all.filter(col("media_id") >= 150).toDF(), "f2.parquet")
+    stageFile(all.filter(col("media_id") >= 150).toDF(), in, "f2.parquet")
     screen() // restart: only the new file may be (re)processed
     // certify the full ROUTING, not just survivors: every batch item
     // lands in exactly one of clean/ and flagged/

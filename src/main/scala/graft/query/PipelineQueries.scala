@@ -270,7 +270,7 @@ object PipelineQueries {
     * fixture, replay and crash-shaped replay included. */
   def screenIngestBloom(s: SparkSession, dir: String): DataFrame =
     QueryOps.withoutAqe(s) {
-    import java.nio.file.{Files, Paths}
+    import graft.streaming.Replay.stageFile
     val src = oneScan(keyedDays(s, dir).select("user_id", "day"))
     val b = src.agg(min("day"), max("day")).collect()(0)
     val (minD, maxD) = (b.getLong(0), b.getLong(1))
@@ -282,7 +282,6 @@ object PipelineQueries {
     val base = graft.WorkDir.fresh(s, "bloomscreen")
     val indexPath = s"$base/idx"
     val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
-    Files.createDirectories(Paths.get(in))
     val fpp = 0.01
     val capacity = derivedCapacity(src)
     BloomIndex.saveBloomIndex(src.filter(col("day") < histMid),
@@ -291,23 +290,15 @@ object PipelineQueries {
       src.filter(col("day") >= histMid && col("day") < histEnd),
       col("user_id"), "h1")
 
-    def addFile(df: DataFrame, name: String): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(s"$in/$name"))
-      ()
-    }
     def screen(): Unit =
       graft.streaming.ScreenStream.screenNewKeys(
         s.readStream.schema("user_id LONG, day LONG").parquet(in),
         "user_id", indexPath, ckpt, out)
         .awaitTermination()
     val today = src.filter(col("day") >= histEnd)
-    addFile(today.filter(col("day") < todayMid), "f1.parquet")
+    stageFile(today.filter(col("day") < todayMid), in, "f1.parquet")
     screen()
-    addFile(today.filter(col("day") >= todayMid), "f2.parquet")
+    stageFile(today.filter(col("day") >= todayMid), in, "f2.parquet")
     screen() // restart: checkpoint resumes, only the new file runs
 
     // emissions across all batches, with per-user emission counts
@@ -573,7 +564,7 @@ object PipelineQueries {
     * replay (re-banking a batch under its own tag is a no-op). */
   def streamProfileInc(s: SparkSession, dir: String): DataFrame =
     QueryOps.withoutAqe(s) {
-    import java.nio.file.{Files, Paths}
+    import graft.streaming.Replay.stageFile
     val src = oneScan(ev(s, dir)
       .filter(col("user_id").isNotNull && col("ets").isNotNull &&
         col("event_type").isNotNull)
@@ -585,7 +576,6 @@ object PipelineQueries {
 
     val base = graft.WorkDir.fresh(s, "profstream")
     val in = s"$base/in"; val ckpt = s"$base/ckpt"
-    Files.createDirectories(Paths.get(in))
     val bloomPath = s"$base/bloom"; val hllPath = s"$base/hll"
     val cmsPath = s"$base/cms"; val histPath = s"$base/hist"
     val quantPath = s"$base/quant"
@@ -604,14 +594,6 @@ object PipelineQueries {
     graft.operators.QuantileIndex.saveQuantileIndex(empty, col("value"),
       quantPath)
 
-    def addFile(df: DataFrame, name: String): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(s"$in/$name"))
-      ()
-    }
     def bank(): Unit =
       graft.streaming.ProfileStream.bankStream(
         s.readStream
@@ -620,9 +602,9 @@ object PipelineQueries {
         "user_id", "event_type", "value",
         bloomPath, hllPath, cmsPath, histPath, ckpt, Some(quantPath))
         .awaitTermination()
-    addFile(src.filter(col("day") < mid), "f1.parquet")
+    stageFile(src.filter(col("day") < mid), in, "f1.parquet")
     bank()
-    addFile(src.filter(col("day") >= mid), "f2.parquet")
+    stageFile(src.filter(col("day") >= mid), in, "f2.parquet")
     bank() // restart: checkpoint resumes, only the new file banks
 
     // Bloom: byte-identity vs a fresh one-pass filter of the full input

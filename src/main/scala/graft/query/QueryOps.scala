@@ -33,21 +33,9 @@ object QueryOps {
     * reverted. The win is real only where the scoped actions contain
     * no size-sensitive join choices.
     *
-    * CONCURRENCY CONTRACT (r20 verdict #9 / ADVICE): this toggles the
-    * SESSION-GLOBAL conf non-atomically — queries wrapped in it must
-    * not run concurrently on the same SparkSession with other queries
-    * (the toggle would leak into a bystander's planning, and the
-    * restore can clobber a nested scope's saved value). Both harnesses
-    * honor this today: Bench and Verify run the registered queries
-    * strictly sequentially on one session, and no query body spawns
-    * driver threads that plan queries. A future multi-threaded
-    * submitter (guide §2.6) must either give each query its own
-    * `spark.newSession()` (per-session conf, shared state) or drop
-    * these scopes; asserting the invariant here is deliberate — a
-    * cloned session per query would re-pay session init on every one
-    * of the ~200 bench rows to defend against a caller that does not
-    * exist. */
-  def withoutAqe[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    * The scope is a [[graft.GraftSession.withConf]] scope and carries
+    * its concurrency contract: single-threaded use of the session. */
+  def withoutAqe[T](s: org.apache.spark.sql.SparkSession)(body: => T): T =
     // Auto-broadcast stays ON inside the scope: a BroadcastExchange
     // build is itself a driver job round-trip, but the A/B probe
     // (r20) showed builds beat the alternative — suppressing them
@@ -55,11 +43,7 @@ object QueryOps {
     // tripled its floor (5.9 s → 15.1 s): the in-job SMJ stages pay
     // 32-task sorts per round that cost more than the build
     // round-trips they replace.
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prev)
-  }
+    graft.GraftSession.withConf(s, "spark.sql.adaptive.enabled" -> "false")(body)
 
   /** How [[funnel]] materializes the step-filtered event slice it
     * re-reads once per step (ADVICE r13: the one-scan win must not
@@ -83,8 +67,7 @@ object QueryOps {
     *
     * Rule of thumb: slice ≤ ~10% of the fact table → default; slice
     * comparable to the fact table → `DiskPersist`; slice larger than
-    * aggregate executor disk → `Rescan`. */
-  /** How [[funnel]] materializes its one-scan event slice.
+    * aggregate executor disk → `Rescan`.
     *
     * Measured crossover (PERF.md "Round-15 (cont.): FunnelScan mode
     * certification", forced min-of-2, local[32]): on the 10×/100×

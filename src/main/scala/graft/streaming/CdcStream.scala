@@ -214,45 +214,28 @@ object CdcStream {
                          stream: Dataset[Chg] => Dataset[Upsert])
       : DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
     require(changes.nonEmpty, "replay needs at least one change")
     require(batches >= 3,
       "replay needs >= 3 micro-batches to certify cross-batch state carry")
-    val mem = MemoryStream[Chg]
-    val name = s"graft_cdc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = spark.conf.get(partsKey)
-    val prevNoData = spark.conf.get(noDataKey, "true")
-    spark.conf.set(partsKey, "2")
-    spark.conf.set(noDataKey, "false")
+    val in = Replay.input[Chg](spark)
     val minUs = changes.map(_.us).min
     val maxUs = changes.map(_.us).max
     val batchUs = math.max(1L, (maxUs - minUs) / batches + 1L)
-    try {
-      val q = stream(mem.toDS()).toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        changes.groupBy(c => (c.us - minUs) / batchUs).toSeq.sortBy(_._1)
-          .foreach { case (_, slot) =>
-            mem.addData(slot)
-            q.processAllAvailable()
-          }
-        sentinelFlushUs.foreach { flushUs =>
-          // sentinel 1 advances the watermark to flushUs; sentinel 2 is
-          // the data batch under that watermark that fires the timeouts
-          mem.addData(Seq(Chg(-1L, flushUs, 0L, "U", 0.0)))
-          q.processAllAvailable()
-          mem.addData(Seq(Chg(-1L, flushUs + 1000000L, 1L, "U", 0.0)))
+    val emitted = Replay.memory(spark, "cdc", partitions = 2, "update")(
+        stream(in.ds).toDF()) { q =>
+      changes.groupBy(c => (c.us - minUs) / batchUs).toSeq.sortBy(_._1)
+        .foreach { case (_, slot) =>
+          in.add(slot)
           q.processAllAvailable()
         }
-      } finally q.stop()
-    } finally {
-      spark.conf.set(partsKey, prevParts)
-      spark.conf.set(noDataKey, prevNoData)
+      sentinelFlushUs.foreach { flushUs =>
+        // sentinel 1 advances the watermark to flushUs; sentinel 2 is
+        // the data batch under that watermark that fires the timeouts
+        in.add(Seq(Chg(-1L, flushUs, 0L, "U", 0.0)))
+        q.processAllAvailable()
+        in.add(Seq(Chg(-1L, flushUs + 1000000L, 1L, "U", 0.0)))
+        q.processAllAvailable()
+      }
     }
     // an eviction marker carries its victim's (us, event_id) — the
     // boolean tie-break ranks it above the state row it evicts; a key
@@ -262,18 +245,11 @@ object CdcStream {
       .partitionBy("user_id")
       .orderBy(desc("last_us"), desc("last_event"),
         (col("last_op") === EvictedOp).desc)
-    val reduced = spark.table(name)
+    val reduced = emitted
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    val out = (if (sentinelFlushUs.isEmpty) reduced
-               else reduced.filter(col("user_id") >= 0 &&
-                 col("last_op") =!= EvictedOp))
-      // materialized so the memory sink's accumulated emissions can be
-      // unregistered before returning (ADVICE r10: replays leaked one
-      // uniquely-named sink table per certification run)
-      .localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
+    if (sentinelFlushUs.isEmpty) reduced
+    else reduced.filter(col("user_id") >= 0 && col("last_op") =!= EvictedOp)
   }
 }

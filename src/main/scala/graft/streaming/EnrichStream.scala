@@ -38,46 +38,25 @@ object EnrichStream {
 
   /** Replay a bounded event set through the real stream in event-time
     * batches (append mode — stateless join, nothing to flush), then
-    * return the appended table. The memory sink is dropped after
-    * materializing (the CdcStream replay rule). */
+    * return the appended table. */
   def replay(spark: SparkSession, events: Seq[Ev], dim: DataFrame,
              dimKey: String, cols: Seq[String],
              batches: Int = 4): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
     require(events.nonEmpty, "replay needs at least one event")
     require(batches >= 3,
       "replay needs >= 3 micro-batches to certify batching invariance")
-    val mem = MemoryStream[Ev]
-    val name = s"graft_enrich_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = spark.conf.get(partsKey)
-    val prevNoData = spark.conf.get(noDataKey, "true")
-    spark.conf.set(partsKey, "2")
-    spark.conf.set(noDataKey, "false")
+    val in = Replay.input[Ev](spark)
     val minUs = events.map(_.us).min
     val maxUs = events.map(_.us).max
     val batchUs = math.max(1L, (maxUs - minUs) / batches + 1L)
-    try {
-      val q = enrich(mem.toDS(), dim, dimKey, cols)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        events.groupBy(e => (e.us - minUs) / batchUs).toSeq.sortBy(_._1)
-          .foreach { case (_, slot) =>
-            mem.addData(slot)
-            q.processAllAvailable()
-          }
-      } finally q.stop()
-    } finally {
-      spark.conf.set(partsKey, prevParts)
-      spark.conf.set(noDataKey, prevNoData)
+    Replay.memory(spark, "enrich", partitions = 2)(
+        enrich(in.ds, dim, dimKey, cols)) { q =>
+      events.groupBy(e => (e.us - minUs) / batchUs).toSeq.sortBy(_._1)
+        .foreach { case (_, slot) =>
+          in.add(slot)
+          q.processAllAvailable()
+        }
     }
-    val out = spark.table(name).localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
   }
 }

@@ -108,53 +108,29 @@ object SessionStream {
     * daily), then one far-future sentinel event (user −1, beyond
     * every timeout) whose watermark advance flushes all remaining
     * open sessions. Collecting through the driver is the documented
-    * replay-harness boundary ([[StreamingIngest.replayDailyDedup]]),
-    * not a production path. */
+    * replay-harness boundary ([[Replay]]), not a production path. */
   def replayWeekly(spark: SparkSession, events: Seq[SessEvent],
                   gapUs: Long): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-    val mem = MemoryStream[SessEvent]
-    val name = s"graft_sess_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = spark.conf.get(partsKey)
-    val prevNoData = spark.conf.get(noDataKey, "true")
-    spark.conf.set(partsKey, "4")
-    // flat per-micro-batch overhead dominates the replay (PERF.md
-    // round 10); the two-sentinel tail guarantees every watermark
-    // advance a following DATA batch to fire timeouts under, so the
-    // automatic no-data batches only double the count — off, restored
-    spark.conf.set(noDataKey, "false")
-    try {
-      val q = sessionize(mem.toDS(), gapUs)
-        .toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        val dayUs = 86400000000L
-        events.groupBy(_.us / (7L * dayUs)).toSeq.sortBy(_._1)
-          .foreach { case (_, dayRows) =>
-            mem.addData(dayRows)
-            q.processAllAvailable()
-          }
-        // TWO sentinel batches: the first advances the watermark past
-        // every real timeout; the second is a DATA batch evaluated
-        // under that watermark, so the timeouts fire inside
-        // processAllAvailable deterministically (a no-data micro-batch
-        // would fire them too, but on the trigger thread's schedule)
-        val flushUs = events.map(_.us).max + gapUs + 2L * dayUs
-        mem.addData(Seq(SessEvent(-1L, flushUs, 0L)))
-        q.processAllAvailable()
-        mem.addData(Seq(SessEvent(-1L, flushUs + 2L * dayUs, 1L)))
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally {
-      spark.conf.set(partsKey, prevParts)
-      spark.conf.set(noDataKey, prevNoData)
-    }
-    spark.table(name).filter(col("user_id") >= 0)
+    val in = Replay.input[SessEvent](spark)
+    Replay.memory(spark, "sess", partitions = 4)(
+        sessionize(in.ds, gapUs).toDF()) { q =>
+      val dayUs = 86400000000L
+      events.groupBy(_.us / (7L * dayUs)).toSeq.sortBy(_._1)
+        .foreach { case (_, dayRows) =>
+          in.add(dayRows)
+          q.processAllAvailable()
+        }
+      // TWO sentinel batches: the first advances the watermark past
+      // every real timeout; the second is a DATA batch evaluated
+      // under that watermark, so the timeouts fire inside
+      // processAllAvailable deterministically (a no-data micro-batch
+      // would fire them too, but on the trigger thread's schedule)
+      val flushUs = events.map(_.us).max + gapUs + 2L * dayUs
+      in.add(Seq(SessEvent(-1L, flushUs, 0L)))
+      q.processAllAvailable()
+      in.add(Seq(SessEvent(-1L, flushUs + 2L * dayUs, 1L)))
+      q.processAllAvailable()
+    }.filter(col("user_id") >= 0)
   }
 }

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * range-condition horizon (here ≤ 2 h of views per user, purchases
   * evicted on arrival of the watermark) — state is bounded by the
   * join window, never by stream length. The replay harness (two
-  * driver-fed MemoryStreams advanced in event-time lockstep, span/4
-  * batches, sentinel flush) is the documented verification boundary,
-  * as in [[SessionStream.replayWeekly]].
+  * driver-fed [[Replay.input]]s advanced in event-time lockstep,
+  * span/4 batches, sentinel flush) is the documented verification
+  * boundary ([[Replay]]).
   */
 object StreamJoin {
 
@@ -75,62 +75,40 @@ object StreamJoin {
     * two-sentinel tail exists precisely so the last real watermark
     * advance gets a deterministic data batch to flush under — the
     * SessionStream design), so no-data micro-batches are disabled
-    * for the replay and restored after (verdict r9 item 4). */
+    * for the replay ([[Replay.scope]], verdict r9 item 4). */
   def replay(spark: SparkSession, views: Seq[Ev], purchases: Seq[Ev],
              windowUs: Long, joinType: String = "inner",
              batches: Int = 4): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
     require(views.nonEmpty && purchases.nonEmpty,
       "replay needs events on both sides")
     require(batches >= 3,
       "replay needs >= 3 micro-batches to certify cross-batch ordering")
-    val memV = MemoryStream[Ev]
-    val memP = MemoryStream[Ev]
-    val name = s"graft_sjoin_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = spark.conf.get(partsKey)
-    val prevNoData = spark.conf.get(noDataKey, "true")
+    val inV = Replay.input[Ev](spark)
+    val inP = Replay.input[Ev](spark)
     val minUs = math.min(views.map(_.us).min, purchases.map(_.us).min)
     val maxUs = math.max(views.map(_.us).max, purchases.map(_.us).max)
     val batchUs = math.max(1L, (maxUs - minUs) / batches + 1L)
     // 2 partitions keep the join genuinely shuffled while bounding the
-    // per-batch state-store lifecycle; no-data batches off — see the
-    // scaladoc (flushes ride the guaranteed next data batch). Set
-    // AFTER every precondition, so a throwing require cannot leak the
-    // overrides past the restoring finally (review r10 finding)
-    spark.conf.set(partsKey, "2")
-    spark.conf.set(noDataKey, "false")
-    try {
-      val q = viewPurchase(memV.toDS(), memP.toDS(), windowUs,
-          joinType = joinType)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        def slot(us: Long): Long = (us - minUs) / batchUs
-        val slots = (views.map(e => slot(e.us)) ++
-          purchases.map(e => slot(e.us))).distinct.sorted
-        val vByS = views.groupBy(e => slot(e.us))
-        val pByS = purchases.groupBy(e => slot(e.us))
-        slots.foreach { w =>
-          memV.addData(vByS.getOrElse(w, Seq.empty))
-          memP.addData(pByS.getOrElse(w, Seq.empty))
-          q.processAllAvailable()
-        }
-        for (i <- 0 to 1) {
-          val f = maxUs + windowUs + (i + 2) * 2L * 86400000000L
-          memV.addData(Seq(Ev(-1L, f, -1L)))
-          memP.addData(Seq(Ev(-2L, f, -2L)))
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-    } finally {
-      spark.conf.set(partsKey, prevParts)
-      spark.conf.set(noDataKey, prevNoData)
-    }
-    spark.table(name).filter(col("user_id") >= 0)
+    // per-batch state-store lifecycle
+    Replay.memory(spark, "sjoin", partitions = 2)(
+        viewPurchase(inV.ds, inP.ds, windowUs, joinType = joinType)) { q =>
+      def slot(us: Long): Long = (us - minUs) / batchUs
+      val slots = (views.map(e => slot(e.us)) ++
+        purchases.map(e => slot(e.us))).distinct.sorted
+      val vByS = views.groupBy(e => slot(e.us))
+      val pByS = purchases.groupBy(e => slot(e.us))
+      slots.foreach { w =>
+        inV.add(vByS.getOrElse(w, Seq.empty))
+        inP.add(pByS.getOrElse(w, Seq.empty))
+        q.processAllAvailable()
+      }
+      for (i <- 0 to 1) {
+        val f = maxUs + windowUs + (i + 2) * 2L * 86400000000L
+        inV.add(Seq(Ev(-1L, f, -1L)))
+        inP.add(Seq(Ev(-2L, f, -2L)))
+        q.processAllAvailable()
+      }
+    }.filter(col("user_id") >= 0)
   }
 }

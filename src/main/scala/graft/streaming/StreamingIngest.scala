@@ -76,112 +76,35 @@ object StreamingIngest {
 
   final case class DomainObs(domain: String, obs_ts: java.sql.Timestamp)
 
-  /** T2 under the correctness gate: replay observations through the
-    * REAL streaming dedup ([[dedupWindow]]) as one micro-batch per
-    * distinct day (ascending), collect the append-mode memory sink.
-    * With a span inside the watermark no state expires, so the emitted
-    * set must equal "first observation per domain" — which a batch
-    * engine (the DuckDB oracle) computes closed-form. Only the key and
-    * the batch DAY of each emission are deterministic (within-batch
-    * row order is not), so callers project to (domain, day).
-    *
-    * The day-batch iteration is a replay HARNESS: observations enter
-    * through a streaming source (MemoryStream) exactly as production
-    * rows would; bound the input (the driver query replays a 5-day
-    * tail) — this is a verification path, not a bulk path. */
-  def replayDailyDedup(spark: SparkSession, obs: Seq[DomainObs],
-                       watermark: String = "25 days"): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-    val mem = MemoryStream[DomainObs]
-    val name = s"graft_replay_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    // watermarked queries normally run a NO-DATA micro-batch after
-    // each data batch to advance the watermark and evict state —
-    // doubling the batch count. First-seen emission happens in the
-    // data batch itself and the replay span sits inside the watermark
-    // (nothing may expire), so eviction timing cannot affect the
-    // result; skip those batches for the replay's lifetime.
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.get(noDataKey)
-    spark.conf.set(noDataKey, "false")
-    // State-store partition count is captured from shuffle.partitions
-    // at stream start and every micro-batch pays an open/commit per
-    // state partition. The replay corpus is verification-bounded
-    // (caller collects it through the driver), so 4 partitions cut the
-    // per-batch state overhead ~8x; a production stream would keep the
-    // session default.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(partsKey)
-    spark.conf.set(partsKey, "4")
-    // start() sits INSIDE the restoring try: if stream start throws,
-    // the session-wide 4-partition override must not leak to later
-    // queries (same for noDataMicroBatches)
-    try {
-      val q = dedupWindow(mem.toDF(), watermark)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        obs.groupBy(o => o.obs_ts.toLocalDateTime.toLocalDate)
-          .toSeq.sortBy(_._1)
-          .foreach { case (_, dayRows) =>
-            mem.addData(dayRows)
-            q.processAllAvailable()
-          }
-      } finally q.stop()
-    } finally {
-      spark.conf.set(noDataKey, prevNoData)
-      spark.conf.set(partsKey, prevParts)
-    }
-    spark.table(name)
-  }
   /** T2 under a PRODUCTION-SHAPED harness: observations are staged as
     * one parquet file per day and fed through the real watermarked
     * dedup stream via a checkpointed FILE source, one AvailableNow run
     * per day — each run RESTARTS the query and resumes dedup state
     * from the checkpoint exactly like a daily ingest job would, and
     * first-seen emissions append idempotently per batch id (the
-    * [[ingestAvailableNow]] overwrite-by-batch-dir protocol). Unlike
-    * [[replayDailyDedup]] no data moves through the driver; the same
-    * closed-form first-observation oracle applies, and cross-restart
-    * state resume (day N's state suppressing day N+1 re-observations)
-    * is part of what is certified. `baseDir` is wiped first. */
+    * [[ingestAvailableNow]] overwrite-by-batch-dir protocol). No data
+    * moves through the driver. With a span inside the watermark no
+    * state expires, so the emitted set must equal "first observation
+    * per domain", which a batch engine (the DuckDB oracle) computes
+    * closed-form; cross-restart state resume (day N's state
+    * suppressing day N+1 re-observations) is part of what is
+    * certified. Bound the input (q_stream_replay_dedup replays a 5-day
+    * tail): this is a verification path, not a bulk path. `baseDir`
+    * is wiped first. */
   def replayDailyDedupFiles(spark: SparkSession, obs: DataFrame,
                             baseDir: String,
                             watermark: String = "25 days"): DataFrame = {
     // Hadoop FileSystem throughout (not java.nio) so baseDir may be any
     // supported scheme — hdfs://, s3a://, file:// — not just local disk
-    val basePath = new org.apache.hadoop.fs.Path(baseDir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(basePath, true)
+    graft.WorkDir.wipe(spark, baseDir)
     val in = s"$baseDir/in"; val ckpt = s"$baseDir/ckpt"
     val out = s"$baseDir/out"
-    fs.mkdirs(new org.apache.hadoop.fs.Path(in))
-    // same bounded-replay session overrides as replayDailyDedup, same
-    // always-restore protocol
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNoData = spark.conf.get(noDataKey)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(partsKey)
-    spark.conf.set(noDataKey, "false")
-    spark.conf.set(partsKey, "4")
-    try {
+    Replay.scope(spark, partitions = 4) {
       val days = obs.select(to_date(col("obs_ts")).as("day"))
         .distinct().orderBy("day").collect().map(_.getDate(0))
       days.zipWithIndex.foreach { case (day, i) =>
-        val tmp = s"$baseDir/stage_$i"
-        obs.filter(to_date(col("obs_ts")) === lit(day))
-          .select("domain", "obs_ts")
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-        // fs.rename signals failure by RETURN VALUE (the java.nio
-        // Files.move it replaced threw); ignoring it would silently
-        // drop a day's input and replay with missing data
-        require(
-          fs.rename(part, new org.apache.hadoop.fs.Path(f"$in/day$i%03d.parquet")),
-          s"rename failed: $part -> $in/day$i%03d.parquet")
+        Replay.stageFile(obs.filter(to_date(col("obs_ts")) === lit(day))
+          .select("domain", "obs_ts"), in, f"day$i%03d.parquet")
         dedupWindow(
             spark.readStream.schema("domain STRING, obs_ts TIMESTAMP")
               .parquet(in), watermark)
@@ -195,9 +118,6 @@ object StreamingIngest {
           .start()
           .awaitTermination()
       }
-    } finally {
-      spark.conf.set(noDataKey, prevNoData)
-      spark.conf.set(partsKey, prevParts)
     }
     spark.read.parquet(out).select("domain", "obs_ts")
   }

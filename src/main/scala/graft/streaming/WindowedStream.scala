@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: state is one row per OPEN window per group key,
   * evicted the moment the watermark closes it; the stream never holds
-  * history. The replay harness (driver-fed MemoryStream, weekly
+  * history. The replay harness (driver-fed [[Replay.input]], weekly
   * batches, far-future sentinel flush) is the documented
-  * verification boundary, same as [[SessionStream.replayWeekly]].
+  * verification boundary ([[Replay]]).
   */
 object WindowedStream {
 
@@ -36,50 +36,28 @@ object WindowedStream {
     * append-mode emissions (sentinel window excluded). */
   def replayHourly(spark: SparkSession, events: Seq[Ev]): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
     require(events.nonEmpty, "replayHourly needs at least one event")
-    val mem = MemoryStream[Ev]
-    val name = s"graft_hourly_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevParts = spark.conf.get(partsKey)
-    val prevNoData = spark.conf.get(noDataKey, "true")
-    spark.conf.set(partsKey, "4")
-    // per-micro-batch cost is flat overhead (PERF.md round 10), and
-    // every watermark advance here is followed by another DATA batch
-    // (the two-sentinel tail guarantees the final one), so the
-    // watermark-advance no-data batch after each data batch only
-    // doubles the batch count — off for the replay, restored after
-    spark.conf.set(noDataKey, "false")
+    val in = Replay.input[Ev](spark)
     val maxUs = events.map(_.us).max
     val flushUs = maxUs + 4L * 86400000000L
-    try {
-      val q = hourlyCounts(mem.toDS())
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      try {
-        events.groupBy(_.us / (7L * 86400000000L)).toSeq.sortBy(_._1)
-          .foreach { case (_, batch) =>
-            mem.addData(batch)
-            q.processAllAvailable()
-          }
-        // two sentinel batches: advance the watermark past every real
-        // window, then evaluate a data batch under it (deterministic
-        // emission inside processAllAvailable)
-        mem.addData(Seq(Ev(flushUs, -1L)))
-        q.processAllAvailable()
-        mem.addData(Seq(Ev(flushUs + 86400000000L, -2L)))
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally {
-      spark.conf.set(partsKey, prevParts)
-      spark.conf.set(noDataKey, prevNoData)
+    val emitted = Replay.memory(spark, "hourly", partitions = 4)(
+        hourlyCounts(in.ds)) { q =>
+      events.groupBy(_.us / (7L * 86400000000L)).toSeq.sortBy(_._1)
+        .foreach { case (_, batch) =>
+          in.add(batch)
+          q.processAllAvailable()
+        }
+      // two sentinel batches: advance the watermark past every real
+      // window, then evaluate a data batch under it (deterministic
+      // emission inside processAllAvailable)
+      in.add(Seq(Ev(flushUs, -1L)))
+      q.processAllAvailable()
+      in.add(Seq(Ev(flushUs + 86400000000L, -2L)))
+      q.processAllAvailable()
     }
     // a real window STARTS at or before the last real event; the
     // sentinel windows start hours later (flushUs is not hour-aligned,
     // so `< flushUs` would leak the truncated sentinel window start)
-    spark.table(name).filter(col("hour_us") <= maxUs)
+    emitted.filter(col("hour_us") <= maxUs)
   }
 }

@@ -1,8 +1,11 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.GraftSession
 import graft.query.{CoreQueries, DomainQueries}
+import graft.streaming.{CdcStream, EnrichStream, Replay}
 
 /** Writes EXPLAINS.md: formatted physical plans for the headline
   * queries — the concrete evidence behind PERF.md's plan-shape claims.
@@ -300,55 +303,26 @@ object ExplainDump {
     // (StreamingQuery.explain after a processed batch) — the
     // FlatMapGroupsWithStateExec / EventTimeWatermarkExec / state-store
     // shape evidence for the q_stream_cdc* gates.
-    def streamingCdcPlan(title: String, retentionUs: Option[Long])
-        : String = {
-      import spark.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import graft.streaming.CdcStream
-      implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
-        spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-      val mem = MemoryStream[CdcStream.Chg]
-      val ds = retentionUs match {
-        case Some(r) => CdcStream.upsertRetention(mem.toDS(), r)
-        case None    => CdcStream.upsert(mem.toDS())
+    def explained(title: String, q: StreamingQuery): String = {
+      val bos = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
+        q.explain()
       }
-      val name =
-        s"graft_explain_cdc_${if (retentionUs.isDefined) "ret" else "plain"}"
-      val q = ds.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        mem.addData(Seq(CdcStream.Chg(1L, 86400000000L, 1L, "I", 1.0)))
-        q.processAllAvailable()
-        val bos = new java.io.ByteArrayOutputStream()
-        Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-          q.explain()
-        }
-        s"## $title\n\n```\n${bos.toString("UTF-8")}\n```\n"
-      } finally { q.stop(); spark.catalog.dropTempView(name) }
+      s"## $title\n\n```\n${bos.toString("UTF-8")}\n```\n"
     }
-    def streamingEnrichPlan(title: String): String = {
-      import spark.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import graft.streaming.EnrichStream
-      implicit val sqlCtx: org.apache.spark.sql.classic.SQLContext =
-        spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-      val mem = MemoryStream[EnrichStream.Ev]
-      val dim = spark.read.parquet(s"$sfDir/customer.parquet")
-      val q = EnrichStream.enrich(mem.toDS(), dim, "c_custkey",
-          Seq("c_mktsegment"))
-        .writeStream.format("memory").queryName("graft_explain_enrich")
-        .outputMode("append").start()
-      try {
-        mem.addData(Seq(EnrichStream.Ev(1L, 1L, 86400000000L, 1.0)))
+    // one driver-fed batch through the gate replay's own harness and
+    // conf scope (Replay.memory: 2 partitions, no no-data batches)
+    def livePlan[T: Encoder](title: String, name: String, mode: String,
+                             row: T)(stream: Dataset[T] => DataFrame)
+        : String = {
+      val in = Replay.input[T](spark)
+      var plan = ""
+      Replay.memory(spark, name, partitions = 2, mode)(stream(in.ds)) { q =>
+        in.add(Seq(row))
         q.processAllAvailable()
-        val bos = new java.io.ByteArrayOutputStream()
-        Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-          q.explain()
-        }
-        s"## $title\n\n```\n${bos.toString("UTF-8")}\n```\n"
-      } finally {
-        q.stop(); spark.catalog.dropTempView("graft_explain_enrich")
+        plan = explained(title, q)
       }
+      plan
     }
     /** The ProfileStream banking face live (r19 verdict: the three
       * slowest new rows need audited plans): a real checkpointed
@@ -363,7 +337,6 @@ object ExplainDump {
         to_date}
       val base = graft.WorkDir.fresh(spark, "explain_profstream")
       val in = s"$base/in"
-      Files.createDirectories(Paths.get(in))
       val src = graft.sources.Tables.loadEventsTs(spark, sfDir)
         .filter(c("user_id").isNotNull && c("ets").isNotNull &&
           c("event_type").isNotNull)
@@ -380,11 +353,7 @@ object ExplainDump {
         s"$base/cms")
       graft.operators.HistIndex.saveHistIndex(empty, c("value"),
         s"$base/hist", lo = 0.0, width = 50.0, nBins = 16)
-      val stage = s"$base/stage"
-      src.coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.move(part.toPath, Paths.get(s"$in/f1.parquet"))
+      Replay.stageFile(src, in, "f1.parquet")
       val q = graft.streaming.ProfileStream.bankStream(
         spark.readStream
           .schema("user_id LONG, event_type STRING, value DOUBLE, day LONG")
@@ -393,28 +362,32 @@ object ExplainDump {
         s"$base/bloom", s"$base/hll", s"$base/cms", s"$base/hist",
         s"$base/ckpt")
       q.awaitTermination()
-      val bos = new java.io.ByteArrayOutputStream()
-      Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
-        q.explain()
-      }
-      s"## $title\n\n```\n${bos.toString("UTF-8")}\n```\n"
+      explained(title, q)
     }
+    import spark.implicits._
+    val cdcRow = CdcStream.Chg(1L, 86400000000L, 1L, "I", 1.0)
     val streamBody =
       streamProfilePlan("q_stream_profile_inc (ProfileStream banking " +
         "face: AvailableNow file-source micro-batch into a " +
         "foreachBatch sink that tag-overwrites delta_b<batchId> in " +
         "all four indexes — no streaming state store; cross-batch " +
         "memory lives in the banked blobs)") + "\n" +
-      streamingCdcPlan("q_stream_cdc (mapGroupsWithState LWW upsert — " +
+      livePlan("q_stream_cdc (mapGroupsWithState LWW upsert — " +
         "one FlatMapGroupsWithState state operator keyed on user_id, " +
-        "update mode, state = one row per live key)", None) + "\n" +
-      streamingCdcPlan("q_stream_cdc_retention (same state operator " +
+        "update mode, state = one row per live key)", "explain_cdc",
+        "update", cdcRow)(CdcStream.upsert(_).toDF()) + "\n" +
+      livePlan("q_stream_cdc_retention (same state operator " +
         "fed by EventTimeWatermark — the EventTimeTimeout eviction " +
-        "path; state bounded by the retention window)",
-        Some(5L * 86400000000L)) + "\n" +
-      streamingEnrichPlan("q_stream_enrich (stream-static broadcast " +
+        "path; state bounded by the retention window)", "explain_cdc",
+        "update", cdcRow)(
+        CdcStream.upsertRetention(_, 5L * 86400000000L).toDF()) + "\n" +
+      livePlan("q_stream_enrich (stream-static broadcast " +
         "hash join per micro-batch — no state store, no stream-side " +
-        "shuffle; the dim re-plans and re-broadcasts each batch)")
+        "shuffle; the dim re-plans and re-broadcasts each batch)",
+        "explain_enrich", "append",
+        EnrichStream.Ev(1L, 1L, 86400000000L, 1.0))(
+        EnrichStream.enrich(_, spark.read.parquet(
+          s"$sfDir/customer.parquet"), "c_custkey", Seq("c_mktsegment")))
 
     Files.writeString(Paths.get(out),
       "# EXPLAINS — formatted physical plans for headline queries\n\n" +

@@ -1,5 +1,7 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,18 +10,34 @@ import org.scalatest.funsuite.AnyFunSuite
   * semantics) keeps the suite fast. */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[File]
+
+  /** A fresh local dir, deleted with everything in it after the suite. */
+  def tempDir(prefix: String): String = synchronized {
+    val d = Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d.toString
+  }
+
+  override protected def afterAll(): Unit = {
+    def rm(f: File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(); ()
+    }
+    try super.afterAll()
+    finally synchronized { tempDirs.foreach(rm); tempDirs.clear() }
+  }
 }
 
 object SparkTestBase {
+  /** The engine's own session builder, so every spec runs with
+    * [[graft.plans.GraftExtensions]] (its functions and optimizer rule)
+    * whatever the suite order; only the parallelism is pinned small. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-test")
+    val s = GraftSession.builder("graft-test")
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.host", "127.0.0.1")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

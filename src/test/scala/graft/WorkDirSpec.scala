@@ -33,34 +33,27 @@ class WorkDirSpec extends SparkTestBase {
 
   test("reap deletes graft_ dirs untouched for 3 h and keeps recent " +
       "ones, live ones and dirs without the prefix") {
-    val root = Files.createTempDirectory("workdir-spec").toFile
+    val root = new File(tempDir("workdir-spec"))
     val old = WorkDir.StaleAfterMs + 3600 * 1000L
-    try {
-      val stale = mkdir(root, "graft_stale_app1")
-      touch(mkfile(mkdir(stale, "idx"), "blob.bin"), old)
-      touch(new File(stale, "idx"), old)
-      touch(stale, old)
-      val recent = mkdir(root, "graft_recent_app2")
-      mkfile(recent, "blob.bin")
-      // an old dir whose direct child a live run just wrote
-      val live = mkdir(root, "graft_live_app3")
-      mkfile(live, "fresh.bin")
-      touch(live, old)
-      val foreign = mkdir(root, "other_stale")
-      touch(mkfile(foreign, "blob.bin"), old)
-      touch(foreign, old)
+    val stale = mkdir(root, "graft_stale_app1")
+    touch(mkfile(mkdir(stale, "idx"), "blob.bin"), old)
+    touch(new File(stale, "idx"), old)
+    touch(stale, old)
+    val recent = mkdir(root, "graft_recent_app2")
+    mkfile(recent, "blob.bin")
+    // an old dir whose direct child a live run just wrote
+    val live = mkdir(root, "graft_live_app3")
+    mkfile(live, "fresh.bin")
+    touch(live, old)
+    val foreign = mkdir(root, "other_stale")
+    touch(mkfile(foreign, "blob.bin"), old)
+    touch(foreign, old)
 
-      WorkDir.reap(root)
+    WorkDir.reap(root)
 
-      assert(!stale.exists())
-      assert(recent.exists() && new File(recent, "blob.bin").exists())
-      assert(live.exists() && new File(live, "fresh.bin").exists())
-      assert(foreign.exists() && new File(foreign, "blob.bin").exists())
-    } finally {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(root)
-    }
+    assert(!stale.exists())
+    assert(recent.exists() && new File(recent, "blob.bin").exists())
+    assert(live.exists() && new File(live, "fresh.bin").exists())
+    assert(foreign.exists() && new File(foreign, "blob.bin").exists())
   }
 }

@@ -96,8 +96,7 @@ class MigratorSpec extends SparkTestBase {
   }
 
   test("runStaged (parquet staging table) matches the cached run") {
-    val staging = java.nio.file.Files
-      .createTempDirectory("graft-staging").toString + "/parsed"
+    val staging = tempDir("graft-staging") + "/parsed"
     val staged = Migrator.runStaged(lines, tlds, Some(geo), "unit-test",
       staging)
     def key(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =

@@ -25,9 +25,8 @@ class BloomIndexSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def freshPath(name: String): String = new java.io.File(
-    System.getProperty("java.io.tmpdir"),
-    s"graft_bloomidx_spec_${name}_${System.nanoTime()}").toString
+  private def freshPath(name: String): String =
+    s"${tempDir(s"graft-bloomidx-$name")}/idx"
 
   // 30k keys across three batches with cross-batch overlap
   lazy val keys = spark.range(30000)

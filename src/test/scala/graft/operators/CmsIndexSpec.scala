@@ -27,9 +27,8 @@ class CmsIndexSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def freshPath(name: String): String = new java.io.File(
-    System.getProperty("java.io.tmpdir"),
-    s"graft_cmsidx_spec_${name}_${System.nanoTime()}").toString
+  private def freshPath(name: String): String =
+    s"${tempDir(s"graft-cmsidx-$name")}/idx"
 
   // Skewed stream: two dominant terms, one "spread" term heavy in
   // every batch but top of none, and a long tail. batch = i % 3.

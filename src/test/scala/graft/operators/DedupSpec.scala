@@ -194,8 +194,7 @@ class DedupSpec extends SparkTestBase {
       (201L, "nothing like the corpus at all")).toDF("doc_id", "text")
     val fresh = Dedup.buildMinhashIndex(docs, "doc_id", col("text"),
       numHashes = 16, bands = 16, shingleK = 3)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-mh-idx").toString
+    val path = tempDir("graft-mh-idx")
     Dedup.saveMinhashIndex(fresh, path)
     val loaded = Dedup.loadMinhashIndex(spark, path)
     assert((loaded.numHashes, loaded.bands, loaded.shingleK) ==
@@ -218,8 +217,7 @@ class DedupSpec extends SparkTestBase {
       (201L, "nothing like the corpus at all")).toDF("doc_id", "text")
     val base = Dedup.buildMinhashIndex(half, "doc_id", col("text"),
       numHashes = 16, bands = 16, shingleK = 3)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-mh-append").toString
+    val path = tempDir("graft-mh-append")
     Dedup.saveMinhashIndex(base, path)
     Dedup.appendMinhashIndex(spark, path, rest, "doc_id", col("text"),
       tag = "b0")

@@ -21,9 +21,8 @@ class HistIndexSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def freshPath(name: String): String = new java.io.File(
-    System.getProperty("java.io.tmpdir"),
-    s"graft_histidx_spec_${name}_${System.nanoTime()}").toString
+  private def freshPath(name: String): String =
+    s"${tempDir(s"graft-histidx-$name")}/idx"
 
   // values 0.5, 1.5, ... 2999.5 over three round-robin batches, plus
   // planted out-of-range rows: spec (lo=0, width=100, nBins=20) puts

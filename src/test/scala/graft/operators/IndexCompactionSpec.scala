@@ -16,9 +16,8 @@ class IndexCompactionSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def fresh(name: String): String = new java.io.File(
-    System.getProperty("java.io.tmpdir"),
-    s"graft_compact_spec_${name}_${System.nanoTime()}").toString
+  private def fresh(name: String): String =
+    s"${tempDir(s"graft-compact-$name")}/idx"
 
   // four round-robin batches over overlapping keys / skewed terms
   lazy val rows = spark.range(8000).select(

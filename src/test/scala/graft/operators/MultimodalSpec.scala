@@ -221,7 +221,7 @@ class MultimodalSpec extends SparkTestBase {
       MediaRecord(2L, "audio", wav, MediaMeta(None, None, None, None)),
       MediaRecord(3L, "image", Array[Byte](1, 2, 3), MediaMeta(None, None, None, None))
     ).toDS()
-    val dir = java.nio.file.Files.createTempDirectory("sigidx").toString
+    val dir = tempDir("sigidx")
     saveSignatureIndex(mediaHashes(corpus), dir)
     // the persisted index is signatures only — 2 decodable rows
     val idx = loadSignatureIndex(spark, dir)

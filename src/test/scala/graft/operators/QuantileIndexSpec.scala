@@ -15,9 +15,8 @@ class QuantileIndexSpec extends SparkTestBase {
   import spark.implicits._
   import QuantileIndex._
 
-  private def fresh(name: String): String = new java.io.File(
-    System.getProperty("java.io.tmpdir"),
-    s"graft_qidx_spec_${name}_${System.nanoTime()}").toString
+  private def fresh(name: String): String =
+    s"${tempDir(s"graft-qidx-$name")}/idx"
 
   /** Deterministic pseudo-random doubles (no Math.random in tests —
     * a failing seed must replay). */

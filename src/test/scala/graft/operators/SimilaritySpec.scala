@@ -157,8 +157,7 @@ class SimilaritySpec extends SparkTestBase {
     val base = vecs.select(col("vec_id").as("id"), col("embedding").as("v"))
     val fresh = Similarity.buildIvfIndex(vecs, "vec_id", "embedding",
       nlist = 3)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivf-idx").toString
+    val path = tempDir("graft-ivf-idx")
     Similarity.saveIvfIndex(fresh, path)
     val loaded = Similarity.loadIvfIndex(spark, path)
     assert(loaded.nlist == fresh.nlist)
@@ -196,8 +195,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(appended.assigned.count() == 40)
     // persisted deltas: save base, append twice under the SAME tag
     // (replay must overwrite, not duplicate), then a second tag
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivf-append").toString
+    val path = tempDir("graft-ivf-append")
     Similarity.saveIvfIndex(fresh, path)
     Similarity.appendIvfIndex(spark, path, batch, "vec_id", "embedding",
       tag = "b0")
@@ -226,8 +224,7 @@ class SimilaritySpec extends SparkTestBase {
     val base = vecs.select(col("vec_id").as("id"), col("embedding").as("v"))
     val fresh = Similarity.buildPqIndex(vecs, "vec_id", "embedding",
       nlist = 3, m = 4, ksub = 4, dims = 16)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-pq-idx").toString
+    val path = tempDir("graft-pq-idx")
     Similarity.savePqIndex(fresh, path)
     val loaded = Similarity.loadPqIndex(spark, path)
     assert(loaded.nlist == fresh.nlist && loaded.m == fresh.m &&
@@ -248,8 +245,7 @@ class SimilaritySpec extends SparkTestBase {
       .select((col("vec_id") + 100).as("vec_id"), col("embedding"))
     val fresh = Similarity.buildPqIndex(vecs, "vec_id", "embedding",
       nlist = 3, m = 4, ksub = 4, dims = 16)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-pq-append").toString
+    val path = tempDir("graft-pq-append")
     Similarity.savePqIndex(fresh, path)
     Similarity.appendPqIndex(spark, path, batch, "vec_id", "embedding",
       tag = "b0")

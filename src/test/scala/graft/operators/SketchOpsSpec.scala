@@ -125,9 +125,7 @@ class SketchOpsSpec extends SparkTestBase {
       "pinned by the stored params") {
     val all = rows.select(($"p" % 5).cast("string").as("seg"), $"id")
     val h = pmod(xxhash64($"id"), lit(3L))
-    val path = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_sketchidx_spec_${System.nanoTime()}").toString
+    val path = s"${tempDir("graft-sketchidx")}/idx"
     // base = hash-third 0, two delta batches — every segment appears
     // in all three parts, so the merge is exercised per segment
     SketchOps.saveSketchIndex(all.filter(h === 0), $"seg", $"id",

@@ -87,7 +87,7 @@ class ZOrderSpec extends SparkTestBase {
     val width = (hiE - loE + 1) / 8
     val (a, b) = (loE + 3 * width, loE + 4 * width - 1)
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zorder")
+    val tmp = tempDir("graft-zorder")
     val linDir = s"$tmp/linear"
     val zDir = s"$tmp/zorder"
     ev.repartitionByRange(16, col("user_id"))

@@ -52,11 +52,8 @@ class DomainExpressionsSpec extends SparkTestBase {
     GraftExtensions.install(spark)
     DomainFunctions.register(spark, Set("com"))
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-rule").toString
+    val dir = tempDir("graft-rule")
     Seq("a.com", "-bad-").toDF("d").write.mode("overwrite").parquet(dir)
-    // force the optimizer rule in even without build-time extensions
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RewriteValidatorUdf
     val df = spark.read.parquet(dir)
       .selectExpr("d", "is_valid_domain(d) AS v")
     val p = df.queryExecution.optimizedPlan.toString
@@ -68,12 +65,10 @@ class DomainExpressionsSpec extends SparkTestBase {
   test("rewrite preserves UDF semantics on NULL input, incl. negation") {
     GraftExtensions.install(spark)
     DomainFunctions.register(spark, Set("com"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-null").toString
+    val dir = tempDir("graft-null")
     import spark.implicits._
     Seq(Some("a.com"), None, Some("-bad-")).toDF("d")
       .write.mode("overwrite").parquet(dir)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RewriteValidatorUdf
     val df = spark.read.parquet(dir)
       .selectExpr("d", "is_valid_domain(d) AS v",
         "NOT is_valid_domain(d) AS nv")
@@ -104,7 +99,7 @@ class DomainExpressionsSpec extends SparkTestBase {
     import spark.implicits._
     // a file-backed source — a local Seq relation would be folded into a
     // LocalTableScan at plan time and hide the expression
-    val dir = java.nio.file.Files.createTempDirectory("graft-expr").toString
+    val dir = tempDir("graft-expr")
     Seq("t.com,a.com,s.a.com").toDF("value")
       .write.mode("overwrite").parquet(dir)
     val res = graft.etl.Cleaner.cleanCname(spark.read.parquet(dir))

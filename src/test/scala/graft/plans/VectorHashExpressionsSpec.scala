@@ -247,7 +247,7 @@ class VectorHashExpressionsSpec extends SparkTestBase {
   }
 
   test("native expressions stay inside whole-stage codegen") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vec").toString
+    val dir = tempDir("graft-vec")
     Seq((1L, Seq(1.0f, 2.0f), "a b c")).toDF("id", "v", "text")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir).select(

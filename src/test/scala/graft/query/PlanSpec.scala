@@ -242,7 +242,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("day-partitioned layout prunes partitions at the scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-part")
+    val tmp = tempDir("graft-part")
     val events = graft.sources.Tables.load(spark, dir, "events")
       .withColumn("day", to_date(timestamp_micros(
         (col("ts") / 1000L).cast("long"))))
@@ -397,7 +397,7 @@ class PlanSpec extends SparkTestBase {
   test("co-located bucketed join needs no exchange at all") {
     // the 100 TB co-location tool: both sides bucketed on the join key
     // at write time -> the join reads pre-shuffled data
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bucket")
+    val tmp = tempDir("graft-bucket")
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_bkt LOCATION '$tmp'")
     try {
       val orders = spark.read.parquet(s"$dir/orders.parquet")

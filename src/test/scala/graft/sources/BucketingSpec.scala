@@ -9,13 +9,10 @@ class BucketingSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString
-
   test("co-located join plans with no shuffle below the sort-merge join") {
     val left = (1 to 1000).map(i => (i.toLong % 97, i.toLong)).toDF("k", "v")
     val right = (1 to 200).map(i => (i.toLong % 97, s"n$i")).toDF("ck", "name")
-    val base = tmp("graft_bucketing_spec")
+    val base = tempDir("graft_bucketing_spec")
     Bucketing.writeBucketed(left, "bspec_left", s"$base/left", 8, "k", Seq("k"))
     Bucketing.writeBucketed(right, "bspec_right", s"$base/right", 8, "ck", Seq("ck"))
 
@@ -51,7 +48,7 @@ class BucketingSpec extends SparkTestBase {
 
   test("each bucket is a single file, so the per-bucket sort survives") {
     val df = (1 to 500).map(i => (i.toLong, s"p$i")).toDF("k", "p")
-    val base = tmp("graft_bucketing_onefile")
+    val base = tempDir("graft_bucketing_onefile")
     Bucketing.writeBucketed(df, "bspec_onefile", s"$base/t", 4, "k", Seq("k"))
     val files = new java.io.File(s"$base/t").listFiles()
       .filter(f => f.getName.endsWith(".parquet"))

@@ -161,7 +161,7 @@ class MmdbSpec extends SparkTestBase {
   }
 
   private def writeTemp(name: String, bytes: Array[Byte]): String = {
-    val p = Files.createTempDirectory("mmdb").resolve(name)
+    val p = Paths.get(tempDir("mmdb")).resolve(name)
     Files.write(p, bytes)
     p.toString
   }

@@ -11,7 +11,7 @@ import java.util.zip.GZIPOutputStream
 class SourcesSpec extends SparkTestBase {
 
   test("S6: gzipped text reads natively (no external gunzip step)") {
-    val dir = Files.createTempDirectory("graft-gz")
+    val dir = tempDir("graft-gz")
     val gz = new GZIPOutputStream(
       new FileOutputStream(s"$dir/domains.txt.gz"))
     gz.write("a.example.com\nb.example.de\n".getBytes)
@@ -22,7 +22,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("S7: quoted CSV parses embedded commas (encoding/csv semantics)") {
-    val dir = Files.createTempDirectory("graft-csv")
+    val dir = tempDir("graft-csv")
     Files.writeString(java.nio.file.Paths.get(s"$dir/in.csv"),
       "\"a,with,commas\",plain\nsecond,\"x\"\"y\"\n")
     val rows = spark.read
@@ -33,7 +33,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("S4: TLD file loads trimmed, lowercased, comment-free") {
-    val dir = Files.createTempDirectory("graft-tld")
+    val dir = tempDir("graft-tld")
     Files.writeString(java.nio.file.Paths.get(s"$dir/tld.txt"),
       "# IANA list\nCOM\nnet\n  org  \n\nco\n")
     val tlds = Dims.loadTlds(spark, s"$dir/tld.txt")
@@ -41,7 +41,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("S5: geo dim loads with the range schema and passes disjointness") {
-    val dir = Files.createTempDirectory("graft-geo")
+    val dir = tempDir("graft-geo")
     Files.writeString(java.nio.file.Paths.get(s"$dir/geo.csv"),
       "start_ip,end_ip,country,city,asn,as_name\n" +
         "100,200,US,LA,1,NetA\n300,400,DE,Berlin,2,NetB\n")

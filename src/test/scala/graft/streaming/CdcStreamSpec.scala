@@ -31,13 +31,13 @@ class CdcStreamSpec extends SparkTestBase {
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prevNoData = spark.conf.get(noDataKey, "true")
     spark.conf.set(noDataKey, "false")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ret")
+    val ckpt = tempDir("graft_cdc_ret")
     val mem = MemoryStream[Chg]
     val name = "graft_cdc_retention_spec"
     val q = CdcStream.upsertRetention(mem.toDS(), retentionUs = 3L * day)
       .toDF()
       .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt.toString)
+      .option("checkpointLocation", ckpt)
       .outputMode("update").start()
     try {
       Seq(
@@ -55,7 +55,7 @@ class CdcStreamSpec extends SparkTestBase {
       // the state data source — not a progress metric (those proved
       // unreliable for this operator); eviction must SHRINK the store
       def stateKeys(b: Int): Seq[Long] = spark.read.format("statestore")
-        .option("path", ckpt.toString).option("batchId", b).load()
+        .option("path", ckpt).option("batchId", b).load()
         .select("key.*").collect().map(_.getLong(0)).toSeq.sorted
       assert(stateKeys(0) == Seq(1L, 2L, 3L))
       assert(stateKeys(1) == Seq(1L, 2L, 3L))
@@ -77,7 +77,6 @@ class CdcStreamSpec extends SparkTestBase {
       if (q.isActive) q.stop()
       spark.conf.set(noDataKey, prevNoData)
       spark.catalog.dropTempView(name)
-      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
 import graft.operators.{BloomIndex, CmsIndex, HistIndex, QuantileIndex, SketchOps}
@@ -27,29 +26,12 @@ class ProfileStreamSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def base: String = {
-    val d = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_profilestream_spec_${System.nanoTime()}").toString
-    Files.createDirectories(Paths.get(s"$d/in"))
-    d
-  }
-
   // (k LONG, seg STRING, v DOUBLE): keys overlap across the two files
   private def rows(lo: Long, hi: Long): DataFrame =
     spark.range(lo, hi).select(
       (col("id") % 500).as("k"),
       concat(lit("s"), col("id") % 3).as("seg"),
       (col("id") % 1000).cast("double").as("v"))
-
-  private def addFile(d: String, df: DataFrame, name: String): Unit = {
-    val tmp = s"$d/stage_$name"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.move(part.toPath, Paths.get(s"$d/in/$name"))
-    ()
-  }
 
   private def initIndexes(d: String)
       : (String, String, String, String, String) = {
@@ -115,7 +97,7 @@ class ProfileStreamSpec extends SparkTestBase {
   test("two files through the checkpointed stream with a restart: all " +
       "four indexes equal fresh single-pass builds at their strongest " +
       "gates (empty day-zero bases included)") {
-    val d = base
+    val d = tempDir("graft-profilestream")
     val (bp, hp, cp, tp, qp) = initIndexes(d)
     def bank(): Unit =
       ProfileStream.bankStream(
@@ -123,9 +105,9 @@ class ProfileStreamSpec extends SparkTestBase {
           .parquet(s"$d/in"),
         "k", "seg", "v", bp, hp, cp, tp, s"$d/ckpt", Some(qp))
         .awaitTermination()
-    addFile(d, rows(0, 700), "f1.parquet")
+    Replay.stageFile(rows(0, 700), s"$d/in", "f1.parquet")
     bank()
-    addFile(d, rows(400, 1200), "f2.parquet")
+    Replay.stageFile(rows(400, 1200), s"$d/in", "f2.parquet")
     bank() // restart: checkpoint resumes, only f2 banks
     assertAllEqualFresh(d, bp, hp, cp, tp, qp, rows(0, 700)
       .unionAll(rows(400, 1200)))
@@ -133,7 +115,7 @@ class ProfileStreamSpec extends SparkTestBase {
 
   test("re-banking a batch under its own tag (the at-least-once " +
       "replay) leaves every index unchanged") {
-    val d = base
+    val d = tempDir("graft-profilestream")
     val (bp, hp, cp, tp, qp) = initIndexes(d)
     val b0 = rows(0, 700)
     ProfileStream.bankBatch(b0, "k", "seg", "v", bp, hp, cp, tp, "b0",

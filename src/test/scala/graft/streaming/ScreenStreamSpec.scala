@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
 import graft.operators.BloomIndex
-import org.apache.spark.sql.DataFrame
 
 /** Correctness burden for the streaming Bloom membership screen
   * ([[ScreenStream]] — the streaming face of [[BloomIndex]]):
@@ -25,28 +23,10 @@ class ScreenStreamSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def freshBase(name: String): String = {
-    val d = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_screenstream_spec_${name}_${System.nanoTime()}").toString
-    Files.createDirectories(Paths.get(d))
-    d
-  }
-
-  private def addFile(base: String, df: DataFrame, name: String): Unit = {
-    val tmp = s"$base/stage_$name"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.move(part.toPath, Paths.get(s"$base/in/$name"))
-    ()
-  }
-
   test("file-stream screen with restart: emitted keys equal the exact " +
       "anti-join per batch, and a key banked by batch 1 is screened " +
       "out of batch 2 (dedup state crosses the restart via the index)") {
-    val base = freshBase("e2e")
-    Files.createDirectories(Paths.get(s"$base/in"))
+    val base = tempDir("graft-screenstream-e2e")
     val idx = s"$base/idx"
     // history: keys 1..100; capacity 50k for ~300 keys -> fp-free
     BloomIndex.saveBloomIndex(spark.range(1, 101).toDF("k"), $"k", idx,
@@ -57,14 +37,14 @@ class ScreenStreamSpec extends SparkTestBase {
         "k", idx, s"$base/ckpt", s"$base/out")
         .awaitTermination()
     // file 1 overlaps history: new = 101..150
-    addFile(base, spark.range(50, 151).toDF("k"), "a.parquet")
+    Replay.stageFile(spark.range(50, 151).toDF("k"), s"$base/in", "a.parquet")
     screen()
     val emittedA = spark.read.parquet(s"$base/out/new")
       .select("k").as[Long].collect().toSet
     assert(emittedA === (101L to 150L).toSet)
     // file 2 overlaps file 1: new = 151..200 ONLY — 100..150 were
     // banked by batch 0's delta, across the restart boundary
-    addFile(base, spark.range(100, 201).toDF("k"), "b.parquet")
+    Replay.stageFile(spark.range(100, 201).toDF("k"), s"$base/in", "b.parquet")
     screen()
     val all = spark.read.parquet(s"$base/out/new")
       .select($"k", $"batch".cast("string")).as[(Long, String)]
@@ -79,7 +59,7 @@ class ScreenStreamSpec extends SparkTestBase {
   test("replay idempotence: a re-run batch rewrites identical output " +
       "and blob; the crash-shape with the delta landed but the output " +
       "lost still regenerates it (own-tag exclusion)") {
-    val base = freshBase("replay")
+    val base = tempDir("graft-screenstream-replay")
     val idx = s"$base/idx"; val out = s"$base/out"
     BloomIndex.saveBloomIndex(spark.range(1, 101).toDF("k"), $"k", idx,
       expectedItems = 50000L)

@@ -13,9 +13,9 @@ class StreamingSpec extends SparkTestBase {
   import spark.implicits._
 
   test("T1: AvailableNow file ingest is exactly-once across restarts") {
-    val in = Files.createTempDirectory("graft-stream-in").toString
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
-    val out = Files.createTempDirectory("graft-stream-out").toString
+    val in = tempDir("graft-stream-in")
+    val ckpt = tempDir("graft-ckpt")
+    val out = tempDir("graft-stream-out")
 
     Files.writeString(java.nio.file.Paths.get(s"$in/day1.csv"),
       "www.example.com,A,1.2.3.4\nalias.b.de,CNAME,real.b.de\n")
@@ -57,9 +57,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming decontamination gate splits batches against the static index") {
     import graft.operators.Dedup
-    val in = Files.createTempDirectory("graft-screen-in").toString
-    val ckpt = Files.createTempDirectory("graft-screen-ckpt").toString
-    val out = Files.createTempDirectory("graft-screen-out").toString
+    val base = tempDir("graft-screen")
+    val in = s"$base/in"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
 
     // static reference corpus: distinct word-id docs
     val corpus = (0 until 10).map { i =>
@@ -68,24 +67,12 @@ class StreamingSpec extends SparkTestBase {
     val index = Dedup.buildMinhashIndex(corpus, "doc_id", col("text"),
       numHashes = 16, bands = 16, shingleK = 3).persisted()
 
-    // the file stream lists `in` flat — stage each parquet write and
-    // move its part file in as a single flat file
-    def addFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-screen-stage").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$in/$name"))
-      ()
-    }
-
     // incoming batch 1: one near-copy of corpus doc 3 + one clean doc
-    addFile(Seq(
+    Replay.stageFile(Seq(
       (100L, (0 until 30).map(j => s"c${300 + j}").mkString(" ")
         .replace("c301", "cXXX")),
       (101L, (0 until 30).map(j => s"n$j").mkString(" ")))
-      .toDF("doc_id", "text"), "f1.parquet")
+      .toDF("doc_id", "text"), in, "f1.parquet")
     val stream1 = spark.readStream
       .schema("doc_id LONG, text STRING").parquet(in)
     StreamingIngest.screenIngest(stream1, index, threshold = 0.5,
@@ -96,9 +83,9 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).toSet == Set(101L))
 
     // restart with one new file: exactly-once — batch 1 not rescreened
-    addFile(Seq((102L, corpus.filter(col("doc_id") === 7)
+    Replay.stageFile(Seq((102L, corpus.filter(col("doc_id") === 7)
         .collect()(0).getString(1))) // exact copy of corpus doc 7
-      .toDF("doc_id", "text"), "f2.parquet")
+      .toDF("doc_id", "text"), in, "f2.parquet")
     val stream2 = spark.readStream
       .schema("doc_id LONG, text STRING").parquet(in)
     StreamingIngest.screenIngest(stream2, index, threshold = 0.5,
@@ -129,22 +116,6 @@ class StreamingSpec extends SparkTestBase {
     assert(rows == Seq("a.com", "b.com", "c.com"))
   }
 
-  test("T2 replay harness: day-batched replay emits first observation only") {
-    def ts(d: Int, h: Int) = Timestamp.valueOf(f"2024-06-$d%02d $h%02d:00:00")
-    val obs = Seq(
-      StreamingIngest.DomainObs("a.com", ts(1, 3)),
-      StreamingIngest.DomainObs("b.com", ts(1, 9)),
-      StreamingIngest.DomainObs("a.com", ts(2, 1)), // repeat, later day
-      StreamingIngest.DomainObs("c.com", ts(3, 5)),
-      StreamingIngest.DomainObs("b.com", ts(3, 6)), // repeat
-      StreamingIngest.DomainObs("c.com", ts(3, 7))) // same-day repeat
-    val out = StreamingIngest.replayDailyDedup(spark, obs)
-      .select("domain", "obs_ts").collect()
-      .map(r => (r.getString(0), r.getTimestamp(1))).sorted.toSeq
-    assert(out == Seq(("a.com", ts(1, 3)), ("b.com", ts(1, 9)),
-      ("c.com", ts(3, 5))))
-  }
-
   test("T2 file-fed replay: per-day files + restarts emit first observation only") {
     import spark.implicits._
     def ts(d: Int, h: Int) = Timestamp.valueOf(f"2024-06-$d%02d $h%02d:00:00")
@@ -154,8 +125,7 @@ class StreamingSpec extends SparkTestBase {
       ("c.com", ts(3, 5)), ("b.com", ts(3, 6)),
       ("c.com", ts(3, 7)))                     // same-day repeat
       .toDF("domain", "obs_ts")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-replay-files").toString
+    val base = tempDir("graft-replay-files")
     val out = StreamingIngest.replayDailyDedupFiles(spark, obs, base)
       .collect().map(r => (r.getString(0), r.getTimestamp(1))).sorted.toSeq
     // day-2 a.com is suppressed only if the day-1 dedup state survived
@@ -234,7 +204,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("compaction keeps last-write-wins per key") {
-    val out = Files.createTempDirectory("graft-compact").toString
+    val out = tempDir("graft-compact")
     def t(s: String) = Timestamp.valueOf(s)
     val df = Seq(
       ("com", "", "a", "", "", "", "", "s1", "A",

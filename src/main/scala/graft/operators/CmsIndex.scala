@@ -2,8 +2,7 @@ package graft.operators
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
@@ -60,43 +59,31 @@ object CmsIndex {
   /** The eps bound in absolute counts for a stream of `n` items. */
   def epsBound(eps: Double, n: Long): Long = math.ceil(eps * n).toLong
 
-  /** Distributed merge of CMS blobs (exact counter addition).
-    * `mergeInPlace` throws on any depth/width/seed mismatch — loud,
-    * never a silent degrade.
-    *
-    * The aggregation BUFFER is the deserialized sketch (r17 ADVICE):
-    * Spark's typed-aggregator machinery keeps the buffer object
-    * in memory across `reduce` calls and serializes only at partition
-    * boundaries, so merging k blobs costs k deserializations + ONE
-    * final serialization instead of the O(k²) blob churn the old
-    * bytes-buffer form paid. NULL and empty inputs are skipped (an
-    * empty batch banks no counters). */
-  class CmsMerge
-      extends Aggregator[Array[Byte], Option[CountMinSketch], Array[Byte]] {
-    override def zero: Option[CountMinSketch] = None
-    override def reduce(b: Option[CountMinSketch],
-                        a: Array[Byte]): Option[CountMinSketch] =
-      if (a == null || a.isEmpty) b
-      else {
-        val s = CountMinSketch.readFrom(new ByteArrayInputStream(a))
-        b match {
-          case Some(acc) => acc.mergeInPlace(s); b
-          case None => Some(s)
-        }
-      }
-    override def merge(b1: Option[CountMinSketch],
-                       b2: Option[CountMinSketch]): Option[CountMinSketch] =
-      (b1, b2) match {
-        case (Some(x), Some(y)) => x.mergeInPlace(y); b1
-        case (None, _) => b2
-        case _ => b1
-      }
-    override def finish(b: Option[CountMinSketch]): Array[Byte] =
-      b.map(_.toByteArray).getOrElse(Array.emptyByteArray)
-    override def bufferEncoder: Encoder[Option[CountMinSketch]] =
-      Encoders.javaSerialization[Option[CountMinSketch]]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
+  /** Exact counter-addition merge of CMS blobs
+    * ([[IndexStore.BlobMerge]]); `mergeInPlace` throws on any
+    * depth/width/seed mismatch. */
+  private val blobMerge = new IndexStore.BlobMerge[CountMinSketch](
+    b => CountMinSketch.readFrom(new ByteArrayInputStream(b)),
+    (acc, s) => acc.mergeInPlace(s), _.toByteArray)
+
+  /** Params (eps, conf, seed, m); a compacted base is the merged
+    * sketch plus the FULL candidate union (keeping every historical
+    * candidate preserves the superset lemma: future batches add their
+    * own SpaceSaving summaries on top). */
+  private val store = new IndexStore.Family[(Double, Double, Int, Int)](
+    { case (eps, conf, seed, m) =>
+      Seq("eps" -> eps, "conf" -> conf, "seed" -> seed, "m" -> m) },
+    p => (p("eps").toDouble, p("conf").toDouble, p("seed").toInt,
+      p("m").toInt),
+    (spark, path) => {
+      import spark.implicits._
+      val (blob, n) = loadMergedSketch(spark, path)
+      // candidate union is m × batches bounded; sorted for a
+      // deterministic on-disk array order
+      val cands = loadCandidates(spark, path).collect()
+        .map(_.getString(0)).sorted.toSeq
+      Seq((Option(blob), n, cands)).toDF("sk", "n", "cands")
+    })
 
   /** ONE (sk BINARY, n LONG, cands ARRAY<STRING>) row: the batch's
     * CMS blob, item count, and SpaceSaving candidate terms — BOTH
@@ -109,8 +96,9 @@ object CmsIndex {
     * the SpaceSaving UDAF are both object-hash aggregates, so they
     * share one ObjectHashAggregateExec pass. NULL terms are excluded
     * (the [[SketchOps]] contract). */
-  private def batchRow(df: DataFrame, term: Column, eps: Double,
-                       conf: Double, seed: Int, m: Int): DataFrame = {
+  private def batchRow(df: DataFrame, term: Column,
+                       p: (Double, Double, Int, Int)): DataFrame = {
+    val (eps, conf, seed, m) = p
     val ss = udaf(new HeavyHitters.SpaceSaving(m))
     df.select(term.as("__t")).where(col("__t").isNotNull)
       .agg(
@@ -122,11 +110,6 @@ object CmsIndex {
         transform(col("__c"), e => e.getField("term")).as("cands"))
   }
 
-  private def writeBatch(df: DataFrame, term: Column, dir: String,
-                         eps: Double, conf: Double, seed: Int,
-                         m: Int): Unit =
-    IndexStore.writeSingle(batchRow(df, term, eps, conf, seed, m), dir)
-
   /** Build and persist the base index: blob + candidates under
     * `path/base`, (eps, conf, seed, m) under `path/params`. */
   def saveCmsIndex(df: DataFrame, term: Column, path: String,
@@ -134,55 +117,30 @@ object CmsIndex {
                    conf: Double = DefaultConfidence,
                    seed: Int = DefaultSeed,
                    m: Int = DefaultCapacity): Unit = {
-    val spark = df.sparkSession
-    writeBatch(df, term, s"$path/base", eps, conf, seed, m)
-    IndexStore.writeParams(spark, path, "eps" -> eps, "conf" -> conf,
-      "seed" -> seed, "m" -> m)
+    val p = (eps, conf, seed, m)
+    store.save(path, p, batchRow(df, term, p))
   }
 
   /** Stored (eps, conf, seed, m). */
   def loadParams(spark: SparkSession, path: String)
-      : (Double, Double, Int, Int) = {
-    val p = IndexStore.params(spark, path)
-    (p("eps").toDouble, p("conf").toDouble, p("seed").toInt, p("m").toInt)
-  }
+      : (Double, Double, Int, Int) = store.params(spark, path)
 
   /** Append a batch WITHOUT rescanning history, at the STORED params;
     * `delta_<tag>` overwrite makes a replayed batch idempotent (and
     * here the overwrite carries the whole burden — CMS merge is
     * addition, a double-read delta WOULD double-count; see scaladoc). */
   def appendCmsIndex(spark: SparkSession, path: String, batch: DataFrame,
-                     term: Column, tag: String): Unit = {
-    val (eps, conf, seed, m) = loadParams(spark, path)
-    writeBatch(batch, term, IndexStore.deltaDir(path, tag),
-      eps, conf, seed, m)
-  }
+                     term: Column, tag: String): Unit =
+    store.append(spark, path, tag)(batchRow(batch, term, _))
 
-  /** Merge base + every delta to ONE sketch: (blob bytes, total n).
-    * Work is blob-count-sized (one ~depth x width x 8 B blob per saved
-    * batch); the merge runs as a distributed aggregate and only the
-    * single merged row lands on the driver — the bounded-params
-    * collect pattern, same as the ANN codebook loads.
-    *
-    * Empty batches (zero non-null terms) are SKIPPED on load — a NULL
-    * `sk` is filtered before the merge rather than fed to it (the
-    * BloomIndex twin's guard, mirrored here after the r17 verdict
-    * caught the asymmetry: Spark's `count_min_sketch` happens to
-    * return a non-null zero-count sketch for an empty batch today, but
-    * the load path must not depend on that internal). An ALL-empty
-    * index (every saved batch empty) normalizes to `(null, 0)` — the
+  /** Merge base + every delta to ONE sketch: (blob bytes, total n),
+    * via [[IndexStore.loadMergedBlob]]. Work is blob-count-sized (one
+    * ~depth x width x 8 B blob per saved batch). Empty batches are
+    * skipped, and an ALL-empty index normalizes to `(null, 0)` — the
     * same contract as [[BloomIndex.loadMergedFilter]]. */
   def loadMergedSketch(spark: SparkSession, path: String)
-      : (Array[Byte], Long) = {
-    val merge = udaf(new CmsMerge(), Encoders.BINARY)
-    val r = IndexStore.unionBatches(spark, path, "", Seq("sk", "n"))
-      .where(col("sk").isNotNull)
-      .agg(merge(col("sk")).as("sk"), sum("n").as("n"))
-      .collect()(0)
-    val blob = r.getAs[Array[Byte]](0)
-    val n = if (r.isNullAt(1)) 0L else r.getLong(1)
-    (if (blob == null || blob.isEmpty || n == 0L) null else blob, n)
-  }
+      : (Array[Byte], Long) =
+    IndexStore.loadMergedBlob(spark, path, blobMerge)
 
   /** Union of every batch's SpaceSaving candidates — the proven
     * heavy-hitter superset (see object scaladoc for the lemma).
@@ -215,26 +173,10 @@ object CmsIndex {
 
   /** Fold base + every delta into a fresh ONE-batch index at
     * `newPath` (copy-on-write — see [[IndexStore]]): stored params,
-    * the merged sketch as the new base blob, and the FULL candidate
-    * union as the new base candidate set (keeping every historical
-    * candidate preserves the superset lemma: future batches add their
-    * own SpaceSaving summaries on top). */
+    * the merged sketch and the candidate union as the new base. */
   def compactCmsIndex(spark: SparkSession, oldPath: String,
-                      newPath: String): Unit = {
-    IndexStore.requireCopyOnWrite(oldPath, newPath)
-    import spark.implicits._
-    val (eps, conf, seed, m) = loadParams(spark, oldPath)
-    val (blob, n) = loadMergedSketch(spark, oldPath)
-    // candidate union is m × batches bounded; sorted for a
-    // deterministic on-disk array order
-    val cands = loadCandidates(spark, oldPath).collect()
-      .map(_.getString(0)).sorted.toSeq
-    IndexStore.writeSingle(
-      Seq((Option(blob), n, cands)).toDF("sk", "n", "cands"),
-      s"$newPath/base")
-    IndexStore.writeParams(spark, newPath, "eps" -> eps, "conf" -> conf,
-      "seed" -> seed, "m" -> m)
-  }
+                      newPath: String): Unit =
+    store.compact(spark, oldPath, newPath)
 
   /** The full index read path: candidates with their merged-sketch
     * estimates and the index's published absolute error bound —

@@ -234,28 +234,19 @@ object Dedup {
   def appendMinhashIndex(spark: SparkSession, path: String,
                          batch: DataFrame, idCol: String, text: Column,
                          tag: String): Unit = {
-    require(tag.matches("[A-Za-z0-9_-]+"), s"unsafe delta tag: $tag")
+    val dir = IndexStore.deltaDir(path, tag)
     val p = spark.read.parquet(s"$path/params").collect()(0)
     val (nh, nb, sk) = (p.getInt(0), p.getInt(1), p.getInt(2))
     bandedFrame(batch, idCol, text, nh, nb, sk)
       .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$path/delta_$tag/banded")
+      .parquet(s"$dir/banded")
     batch.select(col(idCol).as("id"), shingles(text, sk).as("sh"))
-      .write.mode("overwrite").parquet(s"$path/delta_$tag/shingleSets")
-  }
-
-  private def minhashDeltaDirs(spark: SparkSession,
-                               path: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta_"))
-      .map(_.getPath.toString).sorted.toSeq
+      .write.mode("overwrite").parquet(s"$dir/shingleSets")
   }
 
   def loadMinhashIndex(spark: SparkSession, path: String): MinhashIndex = {
     val p = spark.read.parquet(s"$path/params").collect()(0)
-    val deltas = minhashDeltaDirs(spark, path)
+    val deltas = IndexStore.deltaDirs(spark, path)
     MinhashIndex(
       (s"$path/banded" +: deltas.map(d => s"$d/banded"))
         .map(q => spark.read.parquet(q).select("id", "band", "band_hash"))
@@ -275,8 +266,7 @@ object Dedup {
     * (IndexCompactionSpec). */
   def compactMinhashIndex(spark: SparkSession, oldPath: String,
                           newPath: String): Unit = {
-    require(oldPath != newPath,
-      "compaction is copy-on-write: newPath must differ from oldPath")
+    IndexStore.requireCopyOnWrite(oldPath, newPath)
     saveMinhashIndex(loadMinhashIndex(spark, oldPath), newPath)
   }
 

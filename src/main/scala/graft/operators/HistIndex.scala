@@ -41,160 +41,105 @@ object HistIndex {
       .when(v >= lo + width * nBins, lit(nBins.toLong))
       .otherwise(floor((v - lo) / width).cast("long"))
 
-  private def binCounts(df: DataFrame, value: Column, lo: Double,
-                        width: Double, nBins: Int): DataFrame =
-    df.select(value.as("__v")).where(col("__v").isNotNull)
-      .groupBy(bin(col("__v"), lo, width, nBins).as("bin"))
+  // Two faces over one implementation, keyed by a possibly empty
+  // segment list: the global profile (bin, cnt) and the per-SEGMENT
+  // one (seg, bin, cnt) (r18 verdict #7: the HLL index's `seg` column
+  // shape applied to the exact family — per-event-type SLA
+  // percentiles, per-source drift inputs — from the same pinned bin
+  // spec). A batch banks ≤ segments × (nBins + 2) rows; merge is LONG
+  // addition per (seg, bin), so the loaded per-segment profile equals
+  // the full-history one ROW FOR ROW. NULL segments are excluded like
+  // NULL values (a profile keyed on nothing is noise, not a tail).
+
+  private type Spec = (Double, Double, Int)
+
+  /** Params (lo, width, nBins); a compacted base is the summed
+    * profile. Addition is exact, so it is bit-equal row for row. */
+  private def store(keys: Seq[String]) = new IndexStore.Family[Spec](
+    { case (lo, width, nBins) =>
+      Seq("lo" -> lo, "width" -> width, "nBins" -> nBins) },
+    p => (p("lo").toDouble, p("width").toDouble, p("nBins").toInt),
+    histogram(_, _, keys))
+
+  private val Global = Seq.empty[String]
+  private val BySeg = Seq("seg")
+
+  private def binCounts(df: DataFrame, seg: Option[Column], value: Column,
+                        p: Spec): DataFrame = {
+    val keys = seg.toSeq.map(_ => col("seg"))
+    df.select(seg.toSeq.map(_.as("seg")) :+ value.as("__v"): _*)
+      .where(keys.map(_.isNotNull).foldLeft(col("__v").isNotNull)(_ && _))
+      .groupBy(keys :+ bin(col("__v"), p._1, p._2, p._3).as("bin"): _*)
       .agg(count(lit(1)).as("cnt"))
+  }
+
+  private def save(df: DataFrame, seg: Option[Column], value: Column,
+                   path: String, p: Spec): Unit = {
+    val (lo, width, nBins) = p
+    require(width > 0 && nBins > 0, s"bad bin spec: $lo/$width/$nBins")
+    store(seg.fold(Global)(_ => BySeg))
+      .save(path, p, binCounts(df, seg, value, p))
+  }
+
+  /** Sum base + every delta to the EXACT full-history profile, one row
+    * per non-empty (keys..., bin). */
+  private def histogram(spark: SparkSession, path: String,
+                        keys: Seq[String]): DataFrame =
+    IndexStore.unionBatches(spark, path, "", keys ++ Seq("bin", "cnt"))
+      .groupBy((keys :+ "bin").map(col): _*)
+      .agg(sum("cnt").as("cnt"))
 
   /** Build and persist the base index: (bin, cnt) rows under
     * `path/base`, the bin spec under `path/params`. */
   def saveHistIndex(df: DataFrame, value: Column, path: String,
-                    lo: Double, width: Double, nBins: Int): Unit = {
-    require(width > 0 && nBins > 0, s"bad bin spec: $lo/$width/$nBins")
-    val spark = df.sparkSession
-    IndexStore.writeSingle(binCounts(df, value, lo, width, nBins),
-      s"$path/base")
-    IndexStore.writeParams(spark, path, "lo" -> lo, "width" -> width,
-      "nBins" -> nBins)
-  }
+                    lo: Double, width: Double, nBins: Int): Unit =
+    save(df, None, value, path, (lo, width, nBins))
+
+  /** The per-segment base index: (seg, bin, cnt) rows under
+    * `path/base`, the same params as the global face. */
+  def saveHistIndexSeg(df: DataFrame, seg: Column, value: Column,
+                       path: String, lo: Double, width: Double,
+                       nBins: Int): Unit =
+    save(df, Some(seg), value, path, (lo, width, nBins))
 
   /** Stored (lo, width, nBins). */
   def loadParams(spark: SparkSession, path: String)
-      : (Double, Double, Int) = {
-    val p = IndexStore.params(spark, path)
-    (p("lo").toDouble, p("width").toDouble, p("nBins").toInt)
-  }
+      : (Double, Double, Int) =
+    store(Global).params(spark, path)
 
   /** Append a batch at the STORED bin spec; `delta_<tag>` overwrite
     * keeps replays idempotent (addition would double-count a
     * duplicated delta — the CMS caveat, same cure). */
   def appendHistIndex(spark: SparkSession, path: String,
                       batch: DataFrame, value: Column,
-                      tag: String): Unit = {
-    val (lo, width, nBins) = loadParams(spark, path)
-    IndexStore.writeSingle(binCounts(batch, value, lo, width, nBins),
-      IndexStore.deltaDir(path, tag))
-  }
+                      tag: String): Unit =
+    store(Global).append(spark, path, tag)(binCounts(batch, None, value, _))
 
-  /** Sum base + every delta to the EXACT full-history profile:
-    * (bin, cnt), one row per non-empty bin. */
-  def loadHistogram(spark: SparkSession, path: String): DataFrame =
-    IndexStore.unionBatches(spark, path, "", Seq("bin", "cnt"))
-      .groupBy("bin")
-      .agg(sum("cnt").as("cnt"))
-
-  /** Fold base + every delta into a fresh ONE-batch index at
-    * `newPath` (copy-on-write — see [[IndexStore]]): stored bin spec,
-    * the summed profile as the new base. Addition is exact, so the
-    * compacted index is bit-equal row for row. */
-  def compactHistIndex(spark: SparkSession, oldPath: String,
-                       newPath: String): Unit = {
-    IndexStore.requireCopyOnWrite(oldPath, newPath)
-    import spark.implicits._
-    val (lo, width, nBins) = loadParams(spark, oldPath)
-    IndexStore.writeSingle(loadHistogram(spark, oldPath),
-      s"$newPath/base")
-    IndexStore.writeParams(spark, newPath, "lo" -> lo, "width" -> width,
-      "nBins" -> nBins)
-  }
-
-  // ---- per-SEGMENT face (r18 verdict #7): the HLL index's `seg`
-  // column shape applied to the exact family — one value profile per
-  // segment (per-event-type SLA percentiles, per-source drift inputs)
-  // from the same pinned bin spec. A batch banks ≤ segments ×
-  // (nBins + 2) rows; merge is still LONG addition per (seg, bin), so
-  // the loaded per-segment profile equals the full-history one ROW
-  // FOR ROW — the whole output stays oracle-replayable. NULL segments
-  // are excluded like NULL values (a profile keyed on nothing is
-  // noise, not a tail). ----
-
-  private def segBinCounts(df: DataFrame, seg: Column, value: Column,
-                           lo: Double, width: Double,
-                           nBins: Int): DataFrame =
-    df.select(seg.as("seg"), value.as("__v"))
-      .where(col("__v").isNotNull && col("seg").isNotNull)
-      .groupBy(col("seg"), bin(col("__v"), lo, width, nBins).as("bin"))
-      .agg(count(lit(1)).as("cnt"))
-
-  /** Build and persist the per-segment base index: (seg, bin, cnt)
-    * rows under `path/base`, the bin spec under `path/params` (same
-    * params row as the global face). */
-  def saveHistIndexSeg(df: DataFrame, seg: Column, value: Column,
-                       path: String, lo: Double, width: Double,
-                       nBins: Int): Unit = {
-    require(width > 0 && nBins > 0, s"bad bin spec: $lo/$width/$nBins")
-    val spark = df.sparkSession
-    IndexStore.writeSingle(segBinCounts(df, seg, value, lo, width, nBins),
-      s"$path/base")
-    IndexStore.writeParams(spark, path, "lo" -> lo, "width" -> width,
-      "nBins" -> nBins)
-  }
-
-  /** Append a batch at the STORED bin spec — tag overwrite carries
-    * the replay burden exactly as in the global face. */
+  /** [[appendHistIndex]] for the per-segment face. */
   def appendHistIndexSeg(spark: SparkSession, path: String,
                          batch: DataFrame, seg: Column, value: Column,
-                         tag: String): Unit = {
-    val (lo, width, nBins) = loadParams(spark, path)
-    IndexStore.writeSingle(
-      segBinCounts(batch, seg, value, lo, width, nBins),
-      IndexStore.deltaDir(path, tag))
-  }
+                         tag: String): Unit =
+    store(BySeg).append(spark, path, tag)(
+      binCounts(batch, Some(seg), value, _))
 
-  /** Sum base + every delta to the EXACT per-segment profile:
-    * (seg, bin, cnt), one row per non-empty (segment, bin). */
+  /** The EXACT full-history profile: (bin, cnt). */
+  def loadHistogram(spark: SparkSession, path: String): DataFrame =
+    histogram(spark, path, Global)
+
+  /** The EXACT per-segment profile: (seg, bin, cnt). */
   def loadHistogramSeg(spark: SparkSession, path: String): DataFrame =
-    IndexStore.unionBatches(spark, path, "", Seq("seg", "bin", "cnt"))
-      .groupBy("seg", "bin")
-      .agg(sum("cnt").as("cnt"))
+    histogram(spark, path, BySeg)
 
-  /** Copy-on-write compaction of the per-segment face — addition is
-    * exact, so the compacted index is row-for-row identical. */
+  /** Fold base + every delta into a fresh ONE-batch index at
+    * `newPath` (copy-on-write — see [[IndexStore]]). */
+  def compactHistIndex(spark: SparkSession, oldPath: String,
+                       newPath: String): Unit =
+    store(Global).compact(spark, oldPath, newPath)
+
+  /** [[compactHistIndex]] for the per-segment face. */
   def compactHistIndexSeg(spark: SparkSession, oldPath: String,
-                          newPath: String): Unit = {
-    IndexStore.requireCopyOnWrite(oldPath, newPath)
-    import spark.implicits._
-    val (lo, width, nBins) = loadParams(spark, oldPath)
-    IndexStore.writeSingle(loadHistogramSeg(spark, oldPath),
-      s"$newPath/base")
-    IndexStore.writeParams(spark, newPath, "lo" -> lo, "width" -> width,
-      "nBins" -> nBins)
-  }
-
-  /** Per-SEGMENT quantile read: [[quantileBins]] with every rank
-    * computed against its own segment's total — "p95 of yesterday's
-    * values PER event type" answered from segments × (nBins + 2) ×
-    * |qs| rows of blob work. Output (seg, q, bin, lo_edge, hi_edge,
-    * rank, n); segments with zero banked rows are absent (no rank to
-    * bound). */
-  def quantileBinsSeg(spark: SparkSession, path: String,
-                      qs: Seq[Double]): DataFrame = {
-    require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
-      s"quantiles must be in (0, 1]: $qs")
-    val (lo, width, nBins) = loadParams(spark, path)
-    import spark.implicits._
-    // one load, two consumers (per-seg cum + per-seg totals)
-    val hist = loadHistogramSeg(spark, path).localCheckpoint()
-    val h = hist
-      // segment-keyed window: ≤ nBins + 2 rows per partition
-      .withColumn("cum", sum("cnt").over(
-        Window.partitionBy("seg").orderBy("bin")))
-    val totals = hist.groupBy("seg").agg(sum("cnt").as("n"))
-    val qdf = qs.toDF("q")
-    h.join(broadcast(totals), Seq("seg"))
-      .crossJoin(broadcast(qdf))
-      .where(col("cum") >= ceil(col("q") * col("n")))
-      .groupBy("seg", "q", "n")
-      .agg(min("bin").as("bin"))
-      .select(col("seg"), col("q"), col("bin"),
-        when(col("bin") === -1L, lit(Double.NegativeInfinity))
-          .otherwise(lit(lo) + col("bin") * lit(width)).as("lo_edge"),
-        when(col("bin") === nBins.toLong, lit(Double.PositiveInfinity))
-          .otherwise(lit(lo) + (col("bin") + 1L) * lit(width))
-          .as("hi_edge"),
-        ceil(col("q") * col("n")).as("rank"), col("n"))
-  }
+                          newPath: String): Unit =
+    store(BySeg).compact(spark, oldPath, newPath)
 
   /** Quantile read path: for each requested q, the bin containing
     * rank ceil(q·n) — (q, bin, lo_edge, hi_edge, rank, n). Bin-width
@@ -204,30 +149,45 @@ object HistIndex {
     * oracle-replayable. Underflow/overflow bins carry -inf/+inf
     * edges. */
   def quantileBins(spark: SparkSession, path: String,
-                   qs: Seq[Double]): DataFrame = {
+                   qs: Seq[Double]): DataFrame =
+    quantiles(spark, path, qs, Global)
+
+  /** Per-SEGMENT quantile read: [[quantileBins]] with every rank
+    * computed against its own segment's total — "p95 of yesterday's
+    * values PER event type" answered from segments × (nBins + 2) ×
+    * |qs| rows of blob work. Output (seg, q, bin, lo_edge, hi_edge,
+    * rank, n); segments with zero banked rows are absent (no rank to
+    * bound). */
+  def quantileBinsSeg(spark: SparkSession, path: String,
+                      qs: Seq[Double]): DataFrame =
+    quantiles(spark, path, qs, BySeg)
+
+  private def quantiles(spark: SparkSession, path: String, qs: Seq[Double],
+                        keys: Seq[String]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
       s"quantiles must be in (0, 1]: $qs")
     val (lo, width, nBins) = loadParams(spark, path)
     import spark.implicits._
-    // one load, two consumers (cum rows + the total) — localCheckpoint
-    // so the blob union isn't recomputed; ≤ nBins + 2 rows
-    val hist = loadHistogram(spark, path).localCheckpoint()
-    val h = hist
-      // bin-spec-bounded unpartitioned window (≤ nBins + 2 rows by
-      // construction), never data-bounded
-      .withColumn("cum", sum("cnt").over(Window.orderBy("bin")))
-    val qdf = qs.toDF("q")
-    h.crossJoin(broadcast(hist.agg(sum("cnt").as("n"))))
-      .crossJoin(broadcast(qdf))
+    // one load, two consumers (cum rows + the totals) — localCheckpoint
+    // so the blob union isn't recomputed; ≤ segments × (nBins + 2) rows
+    val hist = histogram(spark, path, keys).localCheckpoint()
+    val k = keys.map(col)
+    // bin-spec-bounded window per segment (≤ nBins + 2 rows by
+    // construction), never data-bounded
+    val h = hist.withColumn("cum",
+      sum("cnt").over(Window.partitionBy(k: _*).orderBy("bin")))
+    val totals = broadcast(hist.groupBy(k: _*).agg(sum("cnt").as("n")))
+    (if (keys.isEmpty) h.crossJoin(totals) else h.join(totals, keys))
+      .crossJoin(broadcast(qs.toDF("q")))
       .where(col("cum") >= ceil(col("q") * col("n")))
-      .groupBy("q", "n")
+      .groupBy(k ++ Seq(col("q"), col("n")): _*)
       .agg(min("bin").as("bin"))
-      .select(col("q"), col("bin"),
+      .select(k ++ Seq(col("q"), col("bin"),
         when(col("bin") === -1L, lit(Double.NegativeInfinity))
           .otherwise(lit(lo) + col("bin") * lit(width)).as("lo_edge"),
         when(col("bin") === nBins.toLong, lit(Double.PositiveInfinity))
           .otherwise(lit(lo) + (col("bin") + 1L) * lit(width))
           .as("hi_edge"),
-        ceil(col("q") * col("n")).as("rank"), col("n"))
+        ceil(col("q") * col("n")).as("rank"), col("n")): _*)
   }
 }

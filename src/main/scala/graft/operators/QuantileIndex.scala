@@ -242,7 +242,7 @@ object QuantileIndex {
   }
 
   /** Distributed single-pass build: the aggregation buffer is the
-    * sketch object (the [[CmsIndex.CmsMerge]] protocol — deserialize
+    * sketch object (the [[IndexStore.BlobMerge]] protocol — deserialize
     * per partition boundary, not per row). The result blob depends on
     * partition/merge order, so per-blob BYTE identity is NOT part of
     * this family's contract; the accounted `errBound` holds for every
@@ -272,30 +272,35 @@ object QuantileIndex {
       .agg(merge(col("__v")).as("sk"), count(lit(1)).as("n"))
   }
 
+  /** Params (k); a compacted base is the deterministically merged
+    * blob, so the compacted index loads BIT-IDENTICALLY to the old one
+    * and keeps accepting appends at the stored k. */
+  private val store = new IndexStore.Family[Int](
+    k => Seq("k" -> k), _("k").toInt,
+    (spark, path) => {
+      import spark.implicits._
+      val merged = loadMergedSketch(spark, path)
+      Seq((merged.toBytes, merged.n)).toDF("sk", "n")
+    })
+
   /** Build and persist the base index: blob under `path/base`, `k`
     * under `path/params`. */
   def saveQuantileIndex(df: DataFrame, value: Column, path: String,
                         k: Int = DefaultK): Unit = {
     require(k >= 8, s"quantile sketch k too small: $k")
-    val spark = df.sparkSession
-    import spark.implicits._
-    IndexStore.writeSingle(sketchRow(df, value, k), s"$path/base")
-    IndexStore.writeParams(spark, path, "k" -> k)
+    store.save(path, k, sketchRow(df, value, k))
   }
 
   /** Stored k. */
   def loadParams(spark: SparkSession, path: String): Int =
-    IndexStore.params(spark, path)("k").toInt
+    store.params(spark, path)
 
   /** Append a batch at the STORED k; `delta_<tag>` overwrite keeps
     * replays idempotent (insertion is not — the CMS caveat). */
   def appendQuantileIndex(spark: SparkSession, path: String,
                           batch: DataFrame, value: Column,
-                          tag: String): Unit = {
-    val k = loadParams(spark, path)
-    IndexStore.writeSingle(sketchRow(batch, value, k),
-      IndexStore.deltaDir(path, tag))
-  }
+                          tag: String): Unit =
+    store.append(spark, path, tag)(sketchRow(batch, value, _))
 
   /** Merge base + every delta into one sketch, DETERMINISTICALLY:
     * blobs ordered by batch-dir path (one multi-path scan tagged with
@@ -342,18 +347,8 @@ object QuantileIndex {
   }
 
   /** Fold base + deltas into a fresh ONE-batch index at `newPath`
-    * (copy-on-write — [[IndexStore]]): the deterministically merged
-    * blob becomes the new base, so the compacted index loads
-    * BIT-IDENTICALLY to the old one and keeps accepting appends at
-    * the stored k. */
+    * (copy-on-write — [[IndexStore]]). */
   def compactQuantileIndex(spark: SparkSession, oldPath: String,
-                           newPath: String): Unit = {
-    IndexStore.requireCopyOnWrite(oldPath, newPath)
-    import spark.implicits._
-    val merged = loadMergedSketch(spark, oldPath)
-    val k = loadParams(spark, oldPath)
-    IndexStore.writeSingle(
-      Seq((merged.toBytes, merged.n)).toDF("sk", "n"), s"$newPath/base")
-    IndexStore.writeParams(spark, newPath, "k" -> k)
-  }
+                           newPath: String): Unit =
+    store.compact(spark, oldPath, newPath)
 }

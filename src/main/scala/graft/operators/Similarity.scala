@@ -271,17 +271,16 @@ object Similarity {
     * admissions). [[loadIvfIndex]] sees base + every delta. */
   def appendIvfIndex(spark: SparkSession, path: String, batch: DataFrame,
                      idCol: String, vecCol: String, tag: String): Unit = {
-    require(tag.matches("[A-Za-z0-9_-]+"), s"unsafe delta tag: $tag")
+    val dir = IndexStore.deltaDir(path, tag)
     val coarse = readCentroids(spark, s"$path/centroids")
     assignToCentroids(batch, idCol, vecCol, coarse)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/delta_$tag")
+      .write.mode("overwrite").partitionBy("cell").parquet(dir)
   }
 
   def loadIvfIndex(spark: SparkSession, path: String): IvfIndex = {
     val coarse = readCentroids(spark, s"$path/centroids")
     // normalize column order (partitionBy moves `cell` last on disk)
-    IvfIndex((s"$path/assigned" +: deltaDirs(spark, path))
+    IvfIndex((s"$path/assigned" +: IndexStore.deltaDirs(spark, path))
       .map(p => spark.read.parquet(p).select("id", "v", "cell"))
       .reduce(_ unionByName _), coarse, coarse.length)
   }
@@ -311,21 +310,13 @@ object Similarity {
     * delta. [[loadPqIndex]] sees base + every delta. */
   def appendPqIndex(spark: SparkSession, path: String, batch: DataFrame,
                     idCol: String, vecCol: String, tag: String): Unit = {
-    require(tag.matches("[A-Za-z0-9_-]+"), s"unsafe delta tag: $tag")
+    val dir = IndexStore.deltaDir(path, tag)
     val ix = loadPqIndex(spark, path) // artifacts only; frames stay lazy
     val base = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
     encodePq(base, ix.coarse, ix.codebooks, ix.m, ix.dsub)
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/delta_$tag/assigned")
-    base.write.mode("overwrite").parquet(s"$path/delta_$tag/vectors")
-  }
-
-  private def deltaDirs(spark: SparkSession, path: String): Seq[String] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("delta_"))
-      .map(_.getPath.toString).sorted.toSeq
+      .parquet(s"$dir/assigned")
+    base.write.mode("overwrite").parquet(s"$dir/vectors")
   }
 
   def loadPqIndex(spark: SparkSession, path: String): PqIndex = {
@@ -335,7 +326,7 @@ object Similarity {
       .map(r => (r.getInt(0), r.getSeq[Double](2).toArray))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(_._2).toArray).toArray
-    val deltas = deltaDirs(spark, path)
+    val deltas = IndexStore.deltaDirs(spark, path)
     PqIndex(
       (s"$path/assigned" +: deltas.map(d => s"$d/assigned"))
         .map(p => spark.read.parquet(p).select("id", "cell", "codes"))
@@ -355,8 +346,7 @@ object Similarity {
     * compacted index searches identically (IndexCompactionSpec). */
   def compactIvfIndex(spark: SparkSession, oldPath: String,
                       newPath: String): Unit = {
-    require(oldPath != newPath,
-      "compaction is copy-on-write: newPath must differ from oldPath")
+    IndexStore.requireCopyOnWrite(oldPath, newPath)
     saveIvfIndex(loadIvfIndex(spark, oldPath), newPath)
   }
 
@@ -364,8 +354,7 @@ object Similarity {
     * assigned/vectors fold. */
   def compactPqIndex(spark: SparkSession, oldPath: String,
                      newPath: String): Unit = {
-    require(oldPath != newPath,
-      "compaction is copy-on-write: newPath must differ from oldPath")
+    IndexStore.requireCopyOnWrite(oldPath, newPath)
     savePqIndex(loadPqIndex(spark, oldPath), newPath)
   }
 

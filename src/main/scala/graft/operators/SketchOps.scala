@@ -93,17 +93,18 @@ object SketchOps {
   // single-pass sketch of the same rows (partition-invariance, pinned
   // by SketchOpsSpec and the q_segment_distinct_inc hash gate).
 
+  /** Params (lgK); a compacted base is one merged blob per segment.
+    * Per-SEGMENT rows (not a single blob row), so the one family whose
+    * batches are not coalesced to a single file. */
+  private val store = new IndexStore.Family[Int](
+    lgK => Seq("lgK" -> lgK), _("lgK").toInt, loadSketchIndex,
+    singleFile = false)
+
   /** Build and persist the base segment-sketch index: per-segment HLL
     * blobs under `path/base`, lgK under `path/params`. */
   def saveSketchIndex(df: DataFrame, seg: Column, id: Column,
-                      path: String, lgK: Int = 12): Unit = {
-    val spark = df.sparkSession
-    // per-SEGMENT rows (not a single blob row), so no coalesce(1) —
-    // the one index whose base write is not IndexStore.writeSingle
-    segmentSketches(df, seg, id, lgK)
-      .write.mode("overwrite").parquet(s"$path/base")
-    IndexStore.writeParams(spark, path, "lgK" -> lgK)
-  }
+                      path: String, lgK: Int = 12): Unit =
+    store.save(path, lgK, segmentSketches(df, seg, id, lgK))
 
   /** Append a batch WITHOUT rescanning history: sketch it at the
     * STORED lgK (union with a different lgK would silently degrade
@@ -111,11 +112,8 @@ object SketchOps {
     * replay (overwrite), and HLL-idempotent even if double-read. */
   def appendSketchIndex(spark: SparkSession, path: String,
                         batch: DataFrame, seg: Column, id: Column,
-                        tag: String): Unit = {
-    val lgK = IndexStore.params(spark, path)("lgK").toInt
-    segmentSketches(batch, seg, id, lgK)
-      .write.mode("overwrite").parquet(IndexStore.deltaDir(path, tag))
-  }
+                        tag: String): Unit =
+    store.append(spark, path, tag)(segmentSketches(batch, seg, id, _))
 
   /** Load base + every delta and merge to one blob per segment:
     * (seg, sk). Work is proportional to the number of SAVED BLOBS
@@ -130,13 +128,8 @@ object SketchOps {
     * merged blob per segment as the new base. Register-state union is
     * lossless, so the compacted index estimates identically. */
   def compactSketchIndex(spark: SparkSession, oldPath: String,
-                         newPath: String): Unit = {
-    IndexStore.requireCopyOnWrite(oldPath, newPath)
-    val lgK = IndexStore.params(spark, oldPath)("lgK").toInt
-    loadSketchIndex(spark, oldPath)
-      .write.mode("overwrite").parquet(s"$newPath/base")
-    IndexStore.writeParams(spark, newPath, "lgK" -> lgK)
-  }
+                         newPath: String): Unit =
+    store.compact(spark, oldPath, newPath)
 
   /** Rolling-window APPROXIMATE distinct counts — the
     * [[BitmapOps.rollingDistinct]] shape with per-period HLL blobs in

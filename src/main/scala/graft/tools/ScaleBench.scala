@@ -358,7 +358,10 @@ object ScaleBench {
     val k = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val outDir = args.drop(2).headOption.getOrElse("/tmp/graft_sf1")
     // Focused-probe knobs (outlier pin-downs without the full sweep):
-    //  SCALE_BENCH_ONLY=q_a,q_b  run only those headline queries
+    //  SCALE_BENCH_ONLY=q_a,q_b  run only those headline queries (the
+    //                            name index_compaction_d32 also runs
+    //                            that row; naming no headline query
+    //                            skips the k× build and the warm-ups)
     //  SCALE_BENCH_RUNS=3        min-of-N per (query, scale)
     //  SCALE_BENCH_SKIP_BUILD=1  reuse an existing outDir build
     //  SCALE_BENCH_MEDIA_K=100   extra documents-only tier for the
@@ -371,14 +374,17 @@ object ScaleBench {
     val spark = GraftSession.getOrCreate("graft-scale-bench")
     spark.sparkContext.setLogLevel("WARN")
 
-    val t0 = System.nanoTime()
-    if (!skipBuild) buildScaled(spark, sfDir, k, outDir)
-    println(f"[scale-bench] built ${k}x tables under $outDir in " +
-      f"${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val picked = headline.filter(n => only.forall(_.contains(n)))
+    if (picked.nonEmpty) {
+      val t0 = System.nanoTime()
+      if (!skipBuild) buildScaled(spark, sfDir, k, outDir)
+      println(f"[scale-bench] built ${k}x tables under $outDir in " +
+        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
 
-    // warmup both scan paths
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    spark.read.parquet(s"$outDir/lineitem.parquet").count()
+      // warmup both scan paths
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      spark.read.parquet(s"$outDir/lineitem.parquet").count()
+    }
 
     // per-row 1-min loadavg at query start (the Bench r11 discipline):
     // sub-second-base RATIOS are sweep-context-sensitive (PERF.md round
@@ -390,7 +396,6 @@ object ScaleBench {
         .split("\\s+").head.toDouble
     } catch { case _: Throwable => -1.0 }
     val qs = graft.SparkEntry.queries
-    val picked = headline.filter(n => only.forall(_.contains(n)))
     val rows = picked.map { name =>
       val fn = qs(name)
       val l = load1
@@ -409,7 +414,20 @@ object ScaleBench {
         f"${k}x=$scaled%7.2fs ratio=$ratio%5.1f runs=$runsPer load1=$l%.1f")
       (name, base, scaled, ratio, l)
     }
-    if (only.isDefined) { // focused probe: stop after the named queries
+    // Index-compaction regression row (r18 verdict #4): compact-at-D
+    // cost + post-compaction load on the planted shape above at D=32
+    // daily batches of 500k rows — compaction is blob-count work and
+    // must stay seconds-flat like load.
+    def compactRow: Seq[(String, Double)] = {
+      val cbase = graft.WorkDir.fresh(spark, "scale_compact")
+      val (cms, bloom, quant) = buildIndexes(spark, cbase, 500000L, 32)
+      val t = compactionTimings(spark, cms, bloom, quant, cbase)
+      println(t.map { case (k, v) => f"$k=$v%.2fs" }
+        .mkString("[scale-bench] index_compaction_d32: ", " ", ""))
+      t
+    }
+    if (only.isDefined) { // focused probe: stop after the named rows
+      if (only.get.contains("index_compaction_d32")) compactRow
       spark.stop()
       return
     }
@@ -487,18 +505,7 @@ object ScaleBench {
           (tier, tb2, tm2)
         }
 
-    // Index-compaction regression row (r18 verdict #4): compact-at-D
-    // cost + post-compaction load on the planted shape above at D=32
-    // daily batches of 500k rows — compaction is blob-count work and
-    // must stay seconds-flat like load.
-    val compactRow = {
-      val cbase = graft.WorkDir.fresh(spark, "scale_compact")
-      val (cms, bloom, quant) = buildIndexes(spark, cbase, 500000L, 32)
-      val t = compactionTimings(spark, cms, bloom, quant, cbase)
-      println(t.map { case (k, v) => f"$k=$v%.2fs" }
-        .mkString("[scale-bench] index_compaction_d32: ", " ", ""))
-      t
-    }
+    val compactTimes = compactRow
 
     val worst = rows.maxBy(_._4)
     println(f"[scale-bench] SUMMARY k=$k queries=${rows.size} " +
@@ -511,7 +518,7 @@ object ScaleBench {
       :+ f""""multimodal_features_full":{"base":$ftb%.3f,"scaled":$ftsc%.3f,"ratio":${ftsc / ftb}%.2f,"base_rows":$fnb,"scaled_rows":$fns}"""
       :++ sigTiers.map { case (tier, tb2, tm2) =>
         f""""sig_screen_$tier":{"banded":$tb2%.3f,"mih":$tm2%.3f}""" }
-      :+ compactRow.map { case (k, v) => f""""$k":$v%.3f""" }
+      :+ compactTimes.map { case (k, v) => f""""$k":$v%.3f""" }
         .mkString("\"index_compaction_d32\":{", ",", "}")
       :++ media100.toSeq.flatMap { case (mn1, mt1, fn1, ft1) => Seq(
         f""""multimodal_meta_${mediaK}x":{"base":$mtb%.3f,"scaled":$mt1%.3f,"ratio":${mt1 / mtb}%.2f,"rows":$mn1,"linear_k":$mediaK}""",

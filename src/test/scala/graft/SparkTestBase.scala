@@ -20,14 +20,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     d.toString
   }
 
-  override protected def afterAll(): Unit = {
-    def rm(f: File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
+  override protected def afterAll(): Unit =
     try super.afterAll()
-    finally synchronized { tempDirs.foreach(rm); tempDirs.clear() }
-  }
+    finally synchronized {
+      tempDirs.foreach(SparkTestBase.rm); tempDirs.clear()
+    }
 }
 
 object SparkTestBase {
@@ -40,6 +37,21 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // the session's own WorkDir staging dirs (graft_<name>_<appId>...)
+    // go with the test JVM instead of waiting for the 3-hour reaper
+    val tag = WorkDir.tag(s)
+    sys.addShutdownHook {
+      Option(new File(System.getProperty("java.io.tmpdir")).listFiles())
+        .toSeq.flatten
+        .filter(f => f.getName.startsWith("graft_") &&
+          f.getName.contains(tag))
+        .foreach(rm)
+    }
     s
+  }
+
+  private def rm(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete(); ()
   }
 }

@@ -195,7 +195,10 @@ class IndexCompactionSpec extends SparkTestBase {
         SketchOps.compactSketchIndex(spark, _, _),
         HistIndex.compactHistIndex(spark, _, _),
         HistIndex.compactHistIndexSeg(spark, _, _),
-        QuantileIndex.compactQuantileIndex(spark, _, _))) {
+        QuantileIndex.compactQuantileIndex(spark, _, _),
+        Dedup.compactMinhashIndex(spark, _, _),
+        Similarity.compactIvfIndex(spark, _, _),
+        Similarity.compactPqIndex(spark, _, _))) {
       val e = intercept[IllegalArgumentException](compact(p, p))
       assert(e.getMessage.contains("copy-on-write"))
     }

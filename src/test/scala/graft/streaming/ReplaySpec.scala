@@ -11,8 +11,8 @@ class ReplaySpec extends SparkTestBase {
 
   test("withConf restores a set key and unsets a previously unset key " +
       "after a body that throws") {
-    // a new session: its conf holds only what the builder set, whatever
-    // earlier suites did to the shared one
+    // a new session: its conf holds only what the builder set, so the
+    // check does not depend on which suites ran before it
     val s = spark.newSession()
     val setKey = "spark.sql.shuffle.partitions"
     val unsetKey = "spark.sql.streaming.noDataMicroBatches.enabled"

@@ -39,10 +39,17 @@ object GraftSession {
       .config("spark.driver.host", "127.0.0.1")
   }
 
-  def getOrCreate(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).getOrCreate()
+  def getOrCreate(appName: String = "graft"): SparkSession =
+    start(builder(appName))
+
+  /** The session `b` builds (or the running one) at log level WARN,
+    * with stale staging dirs reaped and its own removed when the JVM
+    * exits ([[WorkDir]]). */
+  private[graft] def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     WorkDir.reapOnce()
+    WorkDir.removeAtExit(spark)
     spark
   }
 

@@ -12,12 +12,13 @@ import org.apache.spark.sql.SparkSession
   *    CONCURRENT processes never collide.
   *  - [[fresh]] also wipes the dir on entry, so reruns in one session
   *    never accumulate.
-  *  - [[reap]] reclaims what neither can: a finished or killed
-  *    session's dirs, which no later session's entry wipe will ever
-  *    touch because its tag differs. Most leave KB of blobs, but
-  *    q_stream_profile_inc stages a near-full copy of the filtered
-  *    events, so without the reaper long-lived boxes accumulate
-  *    data-sized garbage. */
+  *  - [[removeAtExit]] deletes a session's own dirs when its JVM
+  *    exits, so a finished run leaves nothing behind.
+  *  - [[reap]] reclaims what neither can: a killed session's dirs,
+  *    which no later session's entry wipe will ever touch because its
+  *    tag differs. Most leave KB of blobs, but q_stream_profile_inc
+  *    stages a near-full copy of the filtered events, so without the
+  *    reaper long-lived boxes accumulate data-sized garbage. */
 object WorkDir {
   private val Prefix = "graft_"
 
@@ -62,15 +63,35 @@ object WorkDir {
     * left for the next sweep. */
   def reap(root: File): Unit = {
     val cutoff = System.currentTimeMillis() - StaleAfterMs
-    def children(d: File): Seq[File] =
-      Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
     def lastTouched(d: File): Long =
       (d.lastModified() +: children(d).map(_.lastModified())).max
+    removeWhere(root, lastTouched(_) < cutoff)
+  }
+
+  /** Delete every `graft_*` dir directly under `root` whose name
+    * carries `tag`: one session's own staging dirs. */
+  private[graft] def removeTagged(root: File, tag: String): Unit =
+    removeWhere(root, _.getName.contains(tag))
+
+  private def children(d: File): Seq[File] =
+    Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
+
+  /** Best effort: a dir that cannot be removed is left behind. */
+  private def removeWhere(root: File, p: File => Boolean): Unit = {
     def rm(x: File): Unit = { children(x).foreach(rm); x.delete(); () }
     children(root)
-      .filter(f => f.isDirectory && f.getName.startsWith(Prefix) &&
-        lastTouched(f) < cutoff)
+      .filter(f => f.isDirectory && f.getName.startsWith(Prefix) && p(f))
       .foreach(f => try rm(f) catch { case _: Throwable => () })
+  }
+
+  private val exitTags = java.util.concurrent.ConcurrentHashMap
+    .newKeySet[String]()
+
+  /** Registers, once per session, a JVM-exit hook that runs
+    * [[removeTagged]] over `java.io.tmpdir` for the session's [[tag]]. */
+  private[graft] def removeAtExit(s: SparkSession): Unit = {
+    val t = tag(s)
+    if (exitTags.add(t)) { sys.addShutdownHook(removeTagged(tmpRoot, t)); () }
   }
 
   @volatile private var reaped = false

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Multi-source BFS hop distances over a directed edge list — the
   * iterative-frontier workload shape (each round: one equi-join
@@ -35,48 +34,32 @@ object Bfs {
   def hops(edges: DataFrame, sources: DataFrame, maxHops: Int,
            checkpointInterval: Int = 5): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var settled = sources.select(col("node").cast("long")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var frontier = settled
-    // checkpoints still referenced by the lazy settled union chain —
-    // freed the moment a cadence/final checkpoint materializes past
-    // them (leaking them would pin one cached copy per round)
-    val pending = scala.collection.mutable.ArrayBuffer[DataFrame](settled)
-    var h = 1
-    var done = maxHops == 0
-    while (!done) {
-      // each wave is consumed >= 2x (union + next round's expansion +
-      // the emptiness test), so materialize it eagerly; it's the
-      // frontier, not the graph
-      val next = frontier
-        .join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .withColumn("dist", lit(h.toLong))
-        .localCheckpoint(true)
-      pending += next
-      // the settled union chain (checkpointed waves) still accretes
-      // one node per round — collapse it on cadence
-      settled = settled.union(next)
-      if (h % checkpointInterval == 0) {
-        settled = settled.localCheckpoint(true)
-        // frontier (= next) stays live for the coming round
-        pending.filter(_ ne next).foreach(_.unpersist())
-        pending.clear()
-        pending += next
-        pending += settled
+    Iterate(checkpointInterval) { it =>
+      val e = it.hold(
+        edges.select(col("src").cast("long"), col("dst").cast("long")))
+      var settled = Iterate.cut(
+        sources.select(col("node").cast("long")).distinct()
+          .withColumn("dist", lit(0L)))
+      var frontier = settled
+      var h = 1
+      var done = maxHops == 0
+      while (!done) {
+        // each wave is consumed >= 2x (union + next round's expansion +
+        // the emptiness test), so materialize it eagerly; it's the
+        // frontier, not the graph
+        val next = Iterate.cut(frontier
+          .join(e, frontier("node") === e("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(settled, Seq("node"), "left_anti")
+          .withColumn("dist", lit(h.toLong)))
+        // the settled union chain (checkpointed waves) still accretes
+        // one node per round — collapse it on cadence
+        settled = it.cadence(h)(settled.union(next))
+        frontier = next
+        done = h == maxHops || frontier.isEmpty
+        h += 1
       }
-      frontier = next
-      done = h == maxHops || frontier.isEmpty
-      h += 1
+      Iterate.cut(settled)
     }
-    val out = settled.localCheckpoint(true)
-    pending.foreach(_.unpersist())
-    e.unpersist()
-    out
   }
 }

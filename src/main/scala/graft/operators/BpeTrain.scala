@@ -62,7 +62,7 @@ object BpeTrain {
   def train(words: DataFrame, merges: Int): (DataFrame, DataFrame) = {
     require(merges >= 0, "merges must be >= 0")
     val spark = words.sparkSession
-    var seqs = words.select(
+    var seqs = Iterate.cut(words.select(
         col("word"),
         // char-split via filter(:: <> '') — engine split() dialects
         // disagree on zero-width trailing matches; dropping empties is
@@ -70,8 +70,7 @@ object BpeTrain {
         expr("concat_ws('', transform(filter(split(word, ''), " +
           "x -> x <> ''), c -> concat(chr(1), c, chr(2))))")
           .as("seq"),
-        col("cnt").cast("long").as("cnt"))
-      .localCheckpoint(true)
+        col("cnt").cast("long").as("cnt")))
     // display form: boundaries back to spaces, outer wrappers stripped
     def display(seq: org.apache.spark.sql.Column) = {
       val spaced = call_function("replace", seq, lit(STX + SOH), lit(" "))
@@ -96,12 +95,9 @@ object BpeTrain {
       val pair = top(0).getString(0)
       picked += ((r, pair, pair.replace(" ", ""), top(0).getLong(1)))
       // lit()s, not SQL-string splicing: no escaping surface
-      val prev = seqs
-      seqs = seqs.withColumn("seq",
-          call_function("replace", col("seq"),
-            lit(wrapPair(pair)), lit(wrapMerged(pair))))
-        .localCheckpoint(true)
-      prev.unpersist() // superseded eager checkpoint: free its blocks
+      seqs = Iterate.cut(seqs.withColumn("seq",
+        call_function("replace", col("seq"),
+          lit(wrapPair(pair)), lit(wrapMerged(pair)))))
     }
     val mergeTable = spark.createDataFrame(picked.result())
       .toDF("round", "pair", "merged", "cnt")

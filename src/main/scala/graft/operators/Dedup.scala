@@ -599,68 +599,65 @@ object Dedup {
   def nearDupClusters(pairs: DataFrame, idA: String = "id_a",
                       idB: String = "id_b", maxIter: Int = 50,
                       jumpAfter: Int = 5): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // pairs are distinct with idA < idB (candidate-generation contract),
-    // so the mirrored union is duplicate-free without a distinct shuffle
-    val p0 = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .localCheckpoint()
-    val edges = p0
-      .union(p0.select(col("dst"), col("src")))
-      .repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    def labelSum(df: DataFrame): Any = {
-      val r = df.agg(sum(col("cluster").cast("decimal(38,0)"))).collect()(0)
-      if (r.isNullAt(0)) null else r.getDecimal(0)
+    Iterate() { it =>
+      // pairs are distinct with idA < idB (candidate-generation contract),
+      // so the mirrored union is duplicate-free without a distinct shuffle
+      val p0 = Iterate.cut(pairs.select(col(idA).as("src"), col(idB).as("dst")))
+      val edges = it.hold(p0
+        .union(p0.select(col("dst"), col("src")))
+        .repartition(col("dst")))
+      def labelSum(df: DataFrame): Any = {
+        val r = df.agg(sum(col("cluster").cast("decimal(38,0)"))).collect()(0)
+        if (r.isNullAt(0)) null else r.getDecimal(0)
+      }
+      // one hop = one shuffle: neighbor labels (join on the cached,
+      // pre-partitioned edges; the small label frame broadcasts) unioned
+      // with the node's own label, then min per node — the self term
+      // makes a keep-own-label left join unnecessary
+      def hop(cur: DataFrame): DataFrame =
+        edges.join(cur.withColumnRenamed("id", "dst")
+            .withColumnRenamed("cluster", "__c"), "dst")
+          .select(col("src"), col("__c"))
+          .union(cur.select(col("id").as("src"), col("cluster").as("__c")))
+          .groupBy(col("src").as("id"))
+          .agg(min("__c").as("cluster"))
+      // pointer jump: cluster := cluster(cluster). Labels are node ids
+      // and cluster(id) <= id (the seed sets it, hop/jump preserve it),
+      // so the looked-up label only ever lowers; a label pointing at a
+      // component min (no further row improves it) coalesces to itself.
+      def jump(cur: DataFrame): DataFrame = {
+        val lbl = cur.select(col("id").as("__jid"), col("cluster").as("__jc"))
+        cur.join(lbl, cur("cluster") === lbl("__jid"), "left")
+          .select(cur("id"),
+            coalesce(col("__jc"), cur("cluster")).as("cluster"))
+      }
+      // seed = min over self+neighbors of the identity labeling — hop 1
+      // folded into the node-derivation aggregate. LAZY checkpoint: the
+      // convergence-sum action right below is what materializes (and
+      // truncates) each round's labels, so the former eager checkpoint
+      // was a second whole action per round for nothing (r20 job-count
+      // audit: the components family paid ~2 scheduler round-trips per
+      // round; fused it is one).
+      var labels = Iterate.cut(edges.groupBy("src").agg(min("dst").as("__m"))
+        .select(col("src").as("id"),
+          least(col("src"), col("__m")).as("cluster")), eager = false)
+      var prevSum = labelSum(labels)
+      var iter = 1
+      var converged = false
+      while (iter < maxIter && !converged) {
+        val hopped = hop(labels)
+        val next = Iterate.cut(
+          if (iter >= jumpAfter) jump(hopped) else hopped, eager = false)
+        val s = labelSum(next)
+        converged = s == prevSum
+        prevSum = s
+        labels = next
+        iter += 1
+      }
+      require(converged,
+        s"label propagation did not converge in $maxIter rounds")
+      labels
     }
-    // one hop = one shuffle: neighbor labels (join on the cached,
-    // pre-partitioned edges; the small label frame broadcasts) unioned
-    // with the node's own label, then min per node — the self term
-    // makes a keep-own-label left join unnecessary
-    def hop(cur: DataFrame): DataFrame =
-      edges.join(cur.withColumnRenamed("id", "dst")
-          .withColumnRenamed("cluster", "__c"), "dst")
-        .select(col("src"), col("__c"))
-        .union(cur.select(col("id").as("src"), col("cluster").as("__c")))
-        .groupBy(col("src").as("id"))
-        .agg(min("__c").as("cluster"))
-    // pointer jump: cluster := cluster(cluster). Labels are node ids
-    // and cluster(id) <= id (the seed sets it, hop/jump preserve it),
-    // so the looked-up label only ever lowers; a label pointing at a
-    // component min (no further row improves it) coalesces to itself.
-    def jump(cur: DataFrame): DataFrame = {
-      val lbl = cur.select(col("id").as("__jid"), col("cluster").as("__jc"))
-      cur.join(lbl, cur("cluster") === lbl("__jid"), "left")
-        .select(cur("id"),
-          coalesce(col("__jc"), cur("cluster")).as("cluster"))
-    }
-    // seed = min over self+neighbors of the identity labeling — hop 1
-    // folded into the node-derivation aggregate. LAZY checkpoint: the
-    // convergence-sum action right below is what materializes (and
-    // truncates) each round's labels, so the former eager checkpoint
-    // was a second whole action per round for nothing (r20 job-count
-    // audit: the components family paid ~2 scheduler round-trips per
-    // round; fused it is one).
-    var labels = edges.groupBy("src").agg(min("dst").as("__m"))
-      .select(col("src").as("id"),
-        least(col("src"), col("__m")).as("cluster"))
-      .localCheckpoint(eager = false)
-    var prevSum = labelSum(labels)
-    var iter = 1
-    var converged = false
-    while (iter < maxIter && !converged) {
-      val hopped = hop(labels)
-      val next = (if (iter >= jumpAfter) jump(hopped) else hopped)
-        .localCheckpoint(eager = false)
-      val s = labelSum(next)
-      converged = s == prevSum
-      prevSum = s
-      labels = next
-      iter += 1
-    }
-    edges.unpersist(blocking = false)
-    require(converged,
-      s"label propagation did not converge in $maxIter rounds")
-    labels
   }
 
   /** Ids to drop so each near-dup cluster keeps exactly its smallest
@@ -693,8 +690,7 @@ object Dedup {
   def nearDupClustersIncremental(oldLabels: DataFrame,
                                  newPairs: DataFrame,
                                  idA: String = "id_a",
-                                 idB: String = "id_b",
-                                 materialize: Boolean = true): DataFrame = {
+                                 idB: String = "id_b"): DataFrame = {
     val old = oldLabels.select(col("id"), col("cluster"))
       .localCheckpoint(true) // read by both rewrite joins + the remap
     def rep(side: String) =
@@ -726,16 +722,7 @@ object Dedup {
       .join(relabel, newIds("id") === col("__rep"), "left")
       .select(newIds("id"), coalesce(col("__new"), newIds("id"))
         .as("cluster"))
-    val assembled = oldRemapped.unionByName(newLabeled)
-    if (!materialize) assembled // plan-inspection path (ExplainDump):
-    else {                      // `old` stays pinned by the lazy plan
-      // materialized so the corpus-sized `old` checkpoint can be freed
-      // before returning (ADVICE r10 — a lazy return would pin it until
-      // GC, the leak class the cadence-checkpoint operators retired)
-      val out = assembled.localCheckpoint(true)
-      old.unpersist()
-      out
-    }
+    oldRemapped.unionByName(newLabeled)
   }
 
   /** Per-doc contamination hits against a benchmark/eval corpus: the

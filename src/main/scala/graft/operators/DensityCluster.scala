@@ -58,8 +58,7 @@ object DensityCluster {
   def dbscanCosine(df: DataFrame, idCol: String, vecCol: String,
                    threshold: Double, minPts: Int,
                    numPlanes: Int, tables: Int,
-                   dims: Int = 64, probes: Int = 0,
-                   materialize: Boolean = true): DataFrame = {
+                   dims: Int = 64, probes: Int = 0): DataFrame = {
     require(minPts >= 1, "minPts must be >= 1")
     val pairs = Dedup.embeddingNearDups(df, idCol, vecCol, threshold,
         numPlanes, tables, dims = dims, probes = probes)
@@ -89,7 +88,7 @@ object DensityCluster {
       .join(coreClusters.select(col("id").as("nb"),
         col("cluster")), "nb")
       .groupBy("id").agg(min("cluster").as("cluster"))
-    val assembled = roles
+    roles
       .join(coreClusters.withColumnRenamed("cluster", "__cc"),
         Seq("id"), "left")
       .join(borderClusters.withColumnRenamed("cluster", "__bc"),
@@ -99,13 +98,5 @@ object DensityCluster {
           .when(col("__bc").isNotNull, lit("border"))
           .otherwise(lit("noise")).as("role"),
         coalesce(col("__cc"), col("__bc"), lit(-1L)).as("cluster"))
-    if (!materialize) assembled // plan-inspection path (ExplainDump):
-    else {                      // intermediates stay pinned by the plan
-      // node-sized output, eagerly materialized so the intermediate
-      // checkpoints can be freed (the Hits pending-buffer discipline)
-      val out = assembled.localCheckpoint(true)
-      pairs.unpersist(); roles.unpersist()
-      out
-    }
   }
 }

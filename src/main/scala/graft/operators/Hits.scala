@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** HITS hubs-and-authorities (Kleinberg 1999) over a directed edge
   * list, in ''scaled integer arithmetic'': the textbook algorithm
@@ -50,105 +49,82 @@ object Hits {
           checkpointInterval: Int = 5): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     require(scale >= 1L, "scale must be >= 1")
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
 
-    // edges/nodes are re-read by every half-iteration's checkpointed
-    // job — persist unconditionally (unlike the rank-frame cadence,
-    // this pays for itself from iteration 1)
-    val doPersist = iters >= checkpointInterval
-    val eP = e.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesP = nodes.persist(StorageLevel.MEMORY_AND_DISK)
-    // with >= 1 edge both raw frames are non-empty every iteration, so
-    // the per-row guards below can actually fire; an empty graph would
-    // otherwise degenerate to a silent empty result
-    require(!eP.isEmpty,
-      "hits: the graph has no edges — scores are all zero and the " +
-        "max-rescale is undefined")
+    Iterate(checkpointInterval) { it =>
+      // edges/nodes are re-read by every half-iteration's checkpointed
+      // job — persist unconditionally (unlike the rank-frame cadence,
+      // this pays for itself from iteration 1)
+      val doPersist = iters >= checkpointInterval
+      val eP = it.hold(e)
+      val nodesP = it.hold(nodes)
+      // with >= 1 edge both raw frames are non-empty every iteration, so
+      // the per-row guards below can actually fire; an empty graph would
+      // otherwise degenerate to a silent empty result
+      require(!eP.isEmpty,
+        "hits: the graph has no edges — scores are all zero and the " +
+          "max-rescale is undefined")
 
-    val rawLim = Long.MaxValue / scale
-    // every half-iteration's raw checkpoint is tracked here and freed
-    // once a LATER eager checkpoint has materialized past it (the
-    // Bfs/Sssp pending-buffer discipline, ADVICE r9) — otherwise two
-    // node-sized cached frames per iteration pin until GC
-    val pendingRaw = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def rescaled(raw0: DataFrame, out: String): DataFrame = {
-      // eager checkpoint: the raw frame is consumed by both the max
-      // aggregate and the rescale join — without the cut the final
-      // plan re-executes the entire iteration prefix per consumer
-      // (the quadratic-re-evaluation trap of normalized iteration).
-      // It must stay a CHECKPOINT, not a lazy persist (r20 probe): a
-      // persist dedupes execution but leaves the logical plan intact,
-      // and with two references per half-iteration the RENDERED plan
-      // (SQL-listener execution-start events render it per action)
-      // doubles per half-iteration — iters=5 OOM'd the test JVM in
-      // explainString. localCheckpoint truncates the plan to a
-      // LogicalRDD leaf immediately.
-      val raw = raw0.localCheckpoint(true)
-      pendingRaw += raw
-      // the max travels as a broadcast 1-row frame INSIDE the lazy
-      // plan — a driver-side first() here would cost one extra job
-      // per half-iteration; the zero/edgeless guard and the overflow
-      // headroom check ride the same expression as inline
-      // assert_trues (the PageRank discipline), zero extra jobs
-      val maxF = raw.agg(max(col("raw")).as("__m"))
-      val mGuard = coalesce(
-        assert_true(col("__m").isNotNull && col("__m") > 0L,
-          lit("hits: the graph has no edges feeding this side — " +
-            "scores are all zero and the max-rescale is undefined"))
-          .cast("long"),
-        lit(0L))
-      val guard = coalesce(
-        assert_true(coalesce(col("raw"), lit(0L)) <= lit(rawLim),
-          lit(s"hits overflow headroom: a summed score exceeded " +
-            s"Long.Max/scale at scale=$scale; lower `scale`"))
-          .cast("long"),
-        lit(0L))
-      nodesP.join(raw, Seq("node"), "left")
-        .crossJoin(broadcast(maxF))
-        .select(col("node"),
-          // guards first (left-to-right), then exact integer rescale
-          (mGuard + guard +
-            expr(s"(coalesce(raw, 0L) * $scale) div __m")).as(out))
-    }
-
-    var hub = nodesP.withColumn("hub", lit(scale))
-    var auth: DataFrame = null
-    var prevCkpt: DataFrame = null
-    for (i <- 1 to iters) {
-      val aRaw = eP
-        .join(hub.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum("hub").as("raw"))
-      auth = rescaled(aRaw, "auth")
-      val hRaw = eP
-        .join(auth.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(sum("auth").as("raw"))
-      hub = rescaled(hRaw, "hub")
-      if (doPersist && (i % checkpointInterval == 0 || i == iters)) {
-        val ckpt = hub.localCheckpoint(eager = true)
-        if (prevCkpt != null) prevCkpt.unpersist()
-        prevCkpt = ckpt
-        hub = ckpt
-        // the eager hub checkpoint has materialized past every earlier
-        // raw checkpoint; only the current iteration's pair (aRaw,
-        // still referenced by `auth` until the final join, and hRaw)
-        // must outlive it
-        val keep = pendingRaw.takeRight(2)
-        pendingRaw.dropRight(2).foreach(_.unpersist())
-        pendingRaw.clear(); pendingRaw ++= keep
+      val rawLim = Long.MaxValue / scale
+      def rescaled(raw0: DataFrame, out: String): DataFrame = {
+        // eager checkpoint: the raw frame is consumed by both the max
+        // aggregate and the rescale join — without the cut the final
+        // plan re-executes the entire iteration prefix per consumer
+        // (the quadratic-re-evaluation trap of normalized iteration).
+        // It must stay a CHECKPOINT, not a lazy persist (r20 probe): a
+        // persist dedupes execution but leaves the logical plan intact,
+        // and with two references per half-iteration the RENDERED plan
+        // (SQL-listener execution-start events render it per action)
+        // doubles per half-iteration — iters=5 OOM'd the test JVM in
+        // explainString. localCheckpoint truncates the plan to a
+        // LogicalRDD leaf immediately.
+        val raw = Iterate.cut(raw0)
+        // the max travels as a broadcast 1-row frame INSIDE the lazy
+        // plan — a driver-side first() here would cost one extra job
+        // per half-iteration; the zero/edgeless guard and the overflow
+        // headroom check ride the same expression as inline
+        // assert_trues (the PageRank discipline), zero extra jobs
+        val maxF = raw.agg(max(col("raw")).as("__m"))
+        val mGuard = coalesce(
+          assert_true(col("__m").isNotNull && col("__m") > 0L,
+            lit("hits: the graph has no edges feeding this side — " +
+              "scores are all zero and the max-rescale is undefined"))
+            .cast("long"),
+          lit(0L))
+        val guard = coalesce(
+          assert_true(coalesce(col("raw"), lit(0L)) <= lit(rawLim),
+            lit(s"hits overflow headroom: a summed score exceeded " +
+              s"Long.Max/scale at scale=$scale; lower `scale`"))
+            .cast("long"),
+          lit(0L))
+        nodesP.join(raw, Seq("node"), "left")
+          .crossJoin(broadcast(maxF))
+          .select(col("node"),
+            // guards first (left-to-right), then exact integer rescale
+            (mGuard + guard +
+              expr(s"(coalesce(raw, 0L) * $scale) div __m")).as(out))
       }
+
+      var hub = nodesP.withColumn("hub", lit(scale))
+      var auth: DataFrame = null
+      for (i <- 1 to iters) {
+        val aRaw = eP
+          .join(hub.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst").as("node"))
+          .agg(sum("hub").as("raw"))
+        auth = rescaled(aRaw, "auth")
+        val hRaw = eP
+          .join(auth.withColumnRenamed("node", "dst"), "dst")
+          .groupBy(col("src").as("node"))
+          .agg(sum("auth").as("raw"))
+        hub = rescaled(hRaw, "hub")
+        if (doPersist) hub = it.cadence(i, last = i == iters)(hub)
+      }
+      Iterate.cut(hub.join(auth, Seq("node"), "left")
+        .select(col("node"), col("hub"),
+          coalesce(col("auth"), lit(0L)).as("auth")))
     }
-    val out = hub.join(auth, Seq("node"), "left")
-      .select(col("node"), col("hub"),
-        coalesce(col("auth"), lit(0L)).as("auth"))
-      .localCheckpoint(true)
-    pendingRaw.foreach(_.unpersist())
-    if (prevCkpt != null) prevCkpt.unpersist()
-    eP.unpersist(); nodesP.unpersist()
-    out
   }
 }

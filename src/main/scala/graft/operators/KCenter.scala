@@ -56,8 +56,8 @@ object KCenter {
     // duplicate points (d = 0 everywhere once k exceeds the distinct
     // count) would re-pick the seed forever instead of the remaining
     // distinct exemplars (review r9 finding)
-    frame = withDistTo(frame.filter(col("id") =!= seed.getLong(0)),
-      seed, None).localCheckpoint(true)
+    frame = Iterate.cut(
+      withDistTo(frame.filter(col("id") =!= seed.getLong(0)), seed, None))
     for (r <- 1 until k) {
       val rows = frame.orderBy(desc("d"), asc("id"))
         .limit(1).select("id", "v", "dvv", "d").collect()
@@ -66,12 +66,9 @@ object KCenter {
           s"(ran out after ${picked.result().size} picks)")
       val top = rows(0)
       picked += ((r, top.getLong(0), top.getDouble(3)))
-      val prev = frame
-      frame = withDistTo(frame.filter(col("id") =!= top.getLong(0)),
-        top, Some("d")).localCheckpoint(true)
-      prev.unpersist() // superseded eager checkpoint: free its blocks
+      frame = Iterate.cut(withDistTo(
+        frame.filter(col("id") =!= top.getLong(0)), top, Some("d")))
     }
-    frame.unpersist() // the result is the driver-built pick table
     spark.createDataFrame(picked.result())
       .toDF("round", "center_id", "dist")
   }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Fixed-round k-core peeling over an undirected edge list — the
   * standard dense-subgraph screen (Seidman 1983): repeatedly delete
@@ -40,43 +39,34 @@ object KCore {
            checkpointInterval: Int = 3): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 0, "rounds must be >= 0")
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
     val und = e.union(e.select(col("dst"), col("src")))
       .toDF("s", "t").distinct()
 
-    val undP = und.persist(StorageLevel.MEMORY_AND_DISK)
+    Iterate(checkpointInterval) { it =>
+      val undP = it.hold(und)
 
-    def degrees(alive: DataFrame): DataFrame =
-      undP.join(alive.withColumnRenamed("node", "s"), Seq("s"), "left_semi")
-        .join(alive.withColumnRenamed("node", "t"), Seq("t"), "left_semi")
-        .groupBy(col("s").as("node"))
-        .agg(count(lit(1)).as("core_deg"))
+      def degrees(alive: DataFrame): DataFrame =
+        undP.join(alive.withColumnRenamed("node", "s"), Seq("s"), "left_semi")
+          .join(alive.withColumnRenamed("node", "t"), Seq("t"), "left_semi")
+          .groupBy(col("s").as("node"))
+          .agg(count(lit(1)).as("core_deg"))
 
-    // each round references the previous survivor set TWICE (both
-    // semi-joins) — without a lazy persist per round the final plan
-    // forks the whole prefix at every level and early rounds
-    // re-execute 2^rounds times. persist() is lazy (no job per round;
-    // the scheduler materializes each frame once inside the single
-    // final action); the eager checkpoint cadence additionally
-    // truncates lineage on deep runs.
-    val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var alive = undP.select(col("s").as("node")).distinct()
-    for (i <- 1 to rounds) {
-      alive = degrees(alive)
-        .filter(col("core_deg") >= k)
-        .select("node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      kept += alive
-      if (i % checkpointInterval == 0) {
-        alive = alive.localCheckpoint(true)
-        kept += alive // cadence checkpoints are freed at the end too
+      // each round references the previous survivor set TWICE (both
+      // semi-joins) — without a lazy persist per round the final plan
+      // forks the whole prefix at every level and early rounds
+      // re-execute 2^rounds times. persist() is lazy (no job per round;
+      // the scheduler materializes each frame once inside the single
+      // final action); the eager checkpoint cadence additionally
+      // truncates lineage on deep runs.
+      var alive = undP.select(col("s").as("node")).distinct()
+      for (i <- 1 to rounds) {
+        alive = it.cadence(i)(it.hold(degrees(alive)
+          .filter(col("core_deg") >= k)
+          .select("node")))
       }
+      Iterate.cut(degrees(alive))
     }
-    val out = degrees(alive).localCheckpoint(true)
-    kept.foreach(_.unpersist())
-    undP.unpersist()
-    out
   }
 }

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Synchronous label propagation (community detection) over an
   * undirected edge list — the classic near-linear community heuristic
@@ -52,52 +51,43 @@ object LabelProp {
   def run(edges: DataFrame, rounds: Int,
           checkpointInterval: Int = 5): DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
     val und = e.union(e.select(col("dst"), col("src")))
       .toDF("s", "t").distinct()
     val nodes = und.select(col("s").as("node")).distinct()
 
-    val undP = und.persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesP = nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    Iterate(checkpointInterval) { it =>
+      val undP = it.hold(und)
+      val nodesP = it.hold(nodes)
 
-    // each round references the previous labelling TWICE (the vote
-    // join and the isolated-node carryover) — a lazy persist per round
-    // keeps the final single-action plan from forking the whole
-    // prefix at every level (2^rounds re-execution); the eager
-    // checkpoint cadence additionally truncates lineage on deep runs
-    val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var labels = nodesP.withColumn("label", col("node"))
-    for (i <- 1 to rounds) {
-      val votes = undP
-        .join(labels.withColumnRenamed("node", "s"), "s")
-        .groupBy(col("t").as("node"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      // deterministic argmax (highest count, then SMALLEST label) as
-      // min(struct(-c, label)): struct comparison is lexicographic,
-      // and c >= 1 is a count so its negation is a safe order
-      // reversal (labels themselves are never negated — they are
-      // arbitrary ids). Map-side partial min ⇒ a celebrity node's
-      // label votes collapse before the shuffle (no window partition).
-      val winner = votes
-        .groupBy("node")
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("__w"))
-        .select(col("node"), col("__w.label").as("new_label"))
-      labels = labels
-        .join(winner, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("new_label"), col("label")).as("label"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      kept += labels
-      if (i % checkpointInterval == 0) {
-        labels = labels.localCheckpoint(true)
-        kept += labels // cadence checkpoints are freed at the end too
+      // each round references the previous labelling TWICE (the vote
+      // join and the isolated-node carryover) — a lazy persist per round
+      // keeps the final single-action plan from forking the whole
+      // prefix at every level (2^rounds re-execution); the eager
+      // checkpoint cadence additionally truncates lineage on deep runs
+      var labels = nodesP.withColumn("label", col("node"))
+      for (i <- 1 to rounds) {
+        val votes = undP
+          .join(labels.withColumnRenamed("node", "s"), "s")
+          .groupBy(col("t").as("node"), col("label"))
+          .agg(count(lit(1)).as("c"))
+        // deterministic argmax (highest count, then SMALLEST label) as
+        // min(struct(-c, label)): struct comparison is lexicographic,
+        // and c >= 1 is a count so its negation is a safe order
+        // reversal (labels themselves are never negated — they are
+        // arbitrary ids). Map-side partial min ⇒ a celebrity node's
+        // label votes collapse before the shuffle (no window partition).
+        val winner = votes
+          .groupBy("node")
+          .agg(min(struct((-col("c")).as("nc"), col("label"))).as("__w"))
+          .select(col("node"), col("__w.label").as("new_label"))
+        labels = it.cadence(i)(it.hold(labels
+          .join(winner, Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("new_label"), col("label")).as("label"))))
       }
+      Iterate.cut(labels)
     }
-    val out = labels.localCheckpoint(true)
-    kept.foreach(_.unpersist())
-    undP.unpersist(); nodesP.unpersist()
-    out
   }
 }

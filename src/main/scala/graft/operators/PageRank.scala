@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Batch PageRank over an edge DataFrame — the iterative-join workload
   * shape (each iteration: one equi-join edges⋈ranks + one aggregation
@@ -76,7 +75,6 @@ object PageRank {
                    checkpointInterval: Int): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
     require(scale >= 1L, "scale must be >= 1")
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
@@ -92,22 +90,6 @@ object PageRank {
         .withColumn("__src", col("__m").isNotNull).drop("__m")
     }
     def initRank = when(col("__src"), lit(scale)).otherwise(lit(0L))
-    if (iters == 0)
-      return nodes.select(col("node"), initRank.as("rank"))
-
-    // The persistence machinery (caches + checkpoint cadence) pays for
-    // itself when the loop is long enough to take a checkpoint; below
-    // the interval the lazy plan is ≤ interval joins deep — already
-    // bounded — and the eager materializations are pure overhead
-    // (measured 6× on the 3-iteration certification run, BENCH r9).
-    val doPersist = iters >= checkpointInterval
-    val eP = if (doPersist) e.persist(StorageLevel.MEMORY_AND_DISK) else e
-    val nodesP =
-      if (doPersist) nodes.persist(StorageLevel.MEMORY_AND_DISK) else nodes
-    val deg = {
-      val d = eP.groupBy("src").agg(count(lit(1)).as("out_deg"))
-      if (doPersist) d.persist(StorageLevel.MEMORY_AND_DISK) else d
-    }
     val base = lit(15L * scale / 100L)
     // Inline headroom check on the actual sum (see object doc): NULL
     // (-> +0) when safe, loud error before the multiply can wrap.
@@ -120,37 +102,41 @@ object PageRank {
         .cast("long"),
       lit(0L))
 
-    var ranks = nodesP.select(col("node"), initRank.as("rank"))
-    var prevCkpt: DataFrame = null
-    for (i <- 1 to iters) {
-      val contrib = eP
-        .join(deg, "src")
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          expr("rank div out_deg").as("contrib"))
-        .groupBy("node")
-        .agg(sum("contrib").as("s"))
-      ranks = nodesP
-        .join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          // guard is the LEFT operand: addition evaluates left-to-
-          // right, so the assert fires (clear message) before the
-          // multiply can wrap (non-ANSI) or throw raw (ANSI)
-          (when(col("__src"), base).otherwise(lit(0L)) + sGuard +
-            expr("(85 * coalesce(s, 0L)) div 100"))
-            .as("rank"))
-      if (doPersist && (i % checkpointInterval == 0 || i == iters)) {
-        val ckpt = ranks.localCheckpoint(eager = true)
-        if (prevCkpt != null) prevCkpt.unpersist()
-        prevCkpt = ckpt
-        ranks = ckpt
+    Iterate(checkpointInterval) { it =>
+      // The persistence machinery (caches + checkpoint cadence) pays for
+      // itself when the loop is long enough to take a checkpoint; below
+      // the interval the lazy plan is ≤ interval joins deep — already
+      // bounded — and the eager materializations are pure overhead
+      // (measured 6× on the 3-iteration certification run, BENCH r9).
+      val doPersist = iters >= checkpointInterval
+      val eP = if (doPersist) it.hold(e) else e
+      val nodesP = if (doPersist) it.hold(nodes) else nodes
+      val deg = {
+        val d = eP.groupBy("src").agg(count(lit(1)).as("out_deg"))
+        if (doPersist) it.hold(d) else d
       }
+
+      var ranks = nodesP.select(col("node"), initRank.as("rank"))
+      for (i <- 1 to iters) {
+        val contrib = eP
+          .join(deg, "src")
+          .join(ranks.withColumnRenamed("node", "src"), "src")
+          .select(col("dst").as("node"),
+            expr("rank div out_deg").as("contrib"))
+          .groupBy("node")
+          .agg(sum("contrib").as("s"))
+        ranks = nodesP
+          .join(contrib, Seq("node"), "left")
+          .select(col("node"),
+            // guard is the LEFT operand: addition evaluates left-to-
+            // right, so the assert fires (clear message) before the
+            // multiply can wrap (non-ANSI) or throw raw (ANSI)
+            (when(col("__src"), base).otherwise(lit(0L)) + sGuard +
+              expr("(85 * coalesce(s, 0L)) div 100"))
+              .as("rank"))
+        if (doPersist) ranks = it.cadence(i, last = i == iters)(ranks)
+      }
+      ranks.select("node", "rank")
     }
-    if (doPersist) {
-      // Final frame is materialized (eager checkpoint) — the loop
-      // inputs can be dropped without recompute risk.
-      eP.unpersist(); nodesP.unpersist(); deg.unpersist()
-    }
-    ranks.select("node", "rank")
   }
 }

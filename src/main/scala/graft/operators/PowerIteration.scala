@@ -85,7 +85,7 @@ object PowerIteration {
     // size. Note the final guard does NOT dominate the partials:
     // off-diagonal cells are signed, so cross-partition cancellation
     // can leave |total| < |partial|.
-    val cells = q
+    val gram = q
       .filter(size(col("qv")) === dims)
       .select(col("qv")).as[Seq[Long]]
       .mapPartitions { it =>
@@ -108,14 +108,14 @@ object PowerIteration {
       .toDF("i", "j", "p")
       .groupBy("i", "j").agg(sum("p").as("__c"))
       .select(col("i"), col("j"), (cellGuard + col("__c")).as("c"))
-      // LAZY checkpoint: the degenerate-input guard's count() below is
-      // the materializing action, so guard + checkpoint cost exactly
-      // ONE job (the eager form + a separate limit(1) probe was two).
-      // Measured r13: guard-on vs guard-off is within host noise at
-      // sf0.1 — the r12 verdict's +0.29 s suspicion was host drift,
-      // not this probe (PERF.md round 13); the fold is still right,
-      // it just buys tidiness rather than the 0.3 s.
-      .localCheckpoint(false)
+    // LAZY checkpoint: the degenerate-input guard's count() below is
+    // the materializing action, so guard + checkpoint cost exactly
+    // ONE job (the eager form + a separate limit(1) probe was two).
+    // Measured r13: guard-on vs guard-off is within host noise at
+    // sf0.1 — the r12 verdict's +0.29 s suspicion was host drift,
+    // not this probe (PERF.md round 13); the fold is still right,
+    // it just buys tidiness rather than the 0.3 s.
+    val cells = Iterate.cut(gram, eager = false)
     // degenerate-input guard: with an empty corpus (or every row failing
     // the size(qv) === dims filter) the Gram frame is empty, every
     // iteration's crossJoin against the broadcast max produces ZERO rows,
@@ -128,19 +128,12 @@ object PowerIteration {
 
     var v = spark.range(1, dims + 1)
       .select(col("id").as("j"), lit(vscale).as("v"))
-    // each raw checkpoint is freed once the NEXT one has eagerly
-    // materialized past it (the new raw's job consumed the old v, which
-    // was the only reference) — the pending-buffer discipline, ADVICE r9
-    var prevRaw: DataFrame = null
     for (_ <- 1 to iters) {
-      val raw = cells.join(v, "j")
+      // both the max aggregate and the rescale join read raw — the
+      // cut keeps each iteration at exactly one materialization
+      val raw = Iterate.cut(cells.join(v, "j")
         .groupBy(col("i").as("comp"))
-        .agg(sum(col("c") * col("v")).as("raw"))
-        // both the max aggregate and the rescale join read raw — the
-        // cut keeps each iteration at exactly one materialization
-        .localCheckpoint(true)
-      if (prevRaw != null) prevRaw.unpersist()
-      prevRaw = raw
+        .agg(sum(col("c") * col("v")).as("raw")))
       // max|r| as a broadcast 1-row frame inside the lazy plan (the
       // Hits pattern); the collapsed-to-zero guard rides it inline
       val maxF = raw.agg(max(abs(col("raw"))).as("__m"))
@@ -155,13 +148,6 @@ object PowerIteration {
           (mGuard + signum(col("raw")).cast("long") *
             expr(s"(abs(raw) * $vscale) div __m")).as("v"))
     }
-    // the output is checkpointed so the last raw frame and the Gram
-    // cells can be released before returning (nothing downstream
-    // re-derives them)
-    val out = v.select(col("j").as("i"), col("v")).orderBy("i")
-      .localCheckpoint(true)
-    if (prevRaw != null) prevRaw.unpersist()
-    cells.unpersist()
-    out
+    Iterate.cut(v.select(col("j").as("i"), col("v")).orderBy("i"))
   }
 }

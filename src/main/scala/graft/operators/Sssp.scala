@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Bounded-depth single/multi-source shortest paths over an
   * integer-weighted directed edge list — distributed Bellman-Ford:
@@ -40,30 +39,21 @@ object Sssp {
   def bounded(edges: DataFrame, sources: DataFrame, maxHops: Int)
       : DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // fail loudly on a negative weight before any round trusts the frame
-    // (one edge-bounded job, same cost class as the rounds themselves)
-    require(e.filter(col("w") < 0).isEmpty,
-      "Sssp requires non-negative edge weights")
-    var dist = sources.select(col("node").cast("long")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var h = 1
-    while (h <= maxHops) {
-      val prev = dist
-      dist = dist.join(e, dist("node") === e("src"))
-        .select(e("dst").as("node"), (col("dist") + e("w")).as("dist"))
-        .union(dist)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
-      // the new EAGER checkpoint no longer references the old one —
-      // free its blocks instead of leaking one cached copy per round
-      prev.unpersist()
-      h += 1
+    Iterate() { it =>
+      val e = it.hold(edges.select(col("src").cast("long"),
+        col("dst").cast("long"), col("w").cast("long")))
+      // fail loudly on a negative weight before any round trusts the
+      // frame (one edge-bounded job, same cost class as the rounds)
+      require(e.filter(col("w") < 0).isEmpty,
+        "Sssp requires non-negative edge weights")
+      var dist = Iterate.cut(sources.select(col("node").cast("long"))
+        .distinct().withColumn("dist", lit(0L)))
+      for (_ <- 1 to maxHops)
+        dist = Iterate.cut(dist.join(e, dist("node") === e("src"))
+          .select(e("dst").as("node"), (col("dist") + e("w")).as("dist"))
+          .union(dist)
+          .groupBy("node").agg(min("dist").as("dist")))
+      dist
     }
-    e.unpersist()
-    dist
   }
 }

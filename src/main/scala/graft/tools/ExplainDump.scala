@@ -189,9 +189,8 @@ object ExplainDump {
         "+ rank-block equi-join, no trailing dedup shuffle)" ->
         graft.query.WarehouseQueries.entityResolutionSnbNorm(spark, sfDir),
       "q_graph_components_inc (new edges rewritten to cluster reps — " +
-        "components over the batch-sized rep graph, history untouched; " +
-        "materialize=false exposes the rewrite/remap plan the gate's " +
-        "eager checkpoint would hide)" -> {
+        "components over the batch-sized rep graph, history " +
+        "untouched)" -> {
         import org.apache.spark.sql.functions.{col, least, greatest}
         def pairsAt(every: Int) =
           graft.query.GraphQueries.eventEdges(spark, sfDir, every)
@@ -201,7 +200,7 @@ object ExplainDump {
             .distinct()
         graft.operators.Dedup.nearDupClustersIncremental(
           graft.operators.Dedup.nearDupClusters(pairsAt(599)),
-          pairsAt(601), materialize = false)
+          pairsAt(601))
       },
       "q_drift_cusum (one agg shuffle to the bounded (key, period) " +
         "frame, per-key baseline window, typed-order FlatMapGroups " +
@@ -246,13 +245,13 @@ object ExplainDump {
       },
       "q_dbscan_embeddings assembly (degree count, core-core " +
         "semi-joins into components, min-cluster border pick over the " +
-        "checkpointed eps graph; materialize=false exposes the plan)" -> {
+        "checkpointed eps graph)" -> {
         import org.apache.spark.sql.functions.col
         graft.operators.DensityCluster.dbscanCosine(
           spark.read.parquet(s"$sfDir/embeddings.parquet")
             .filter(col("vec_id") < 500),
           "vec_id", "embedding", threshold = 0.40, minPts = 3,
-          numPlanes = 3, tables = 48, materialize = false)
+          numPlanes = 3, tables = 48)
       },
       "q_segment_overlap (bitmap OR-merge: duplicates die in the " +
         "map-side partial agg, one blob per (seg, bucket) on the " +

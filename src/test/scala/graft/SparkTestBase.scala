@@ -30,25 +30,12 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 object SparkTestBase {
   /** The engine's own session builder, so every spec runs with
     * [[graft.plans.GraftExtensions]] (its functions and optimizer rule)
-    * whatever the suite order; only the parallelism is pinned small. */
-  lazy val session: SparkSession = {
-    val s = GraftSession.builder("graft-test")
+    * whatever the suite order, and the engine's staging-dir cleanup;
+    * only the parallelism is pinned small. */
+  lazy val session: SparkSession = GraftSession.start(
+    GraftSession.builder("graft-test")
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // the session's own WorkDir staging dirs (graft_<name>_<appId>...)
-    // go with the test JVM instead of waiting for the 3-hour reaper
-    val tag = WorkDir.tag(s)
-    sys.addShutdownHook {
-      Option(new File(System.getProperty("java.io.tmpdir")).listFiles())
-        .toSeq.flatten
-        .filter(f => f.getName.startsWith("graft_") &&
-          f.getName.contains(tag))
-        .foreach(rm)
-    }
-    s
-  }
+      .config("spark.sql.shuffle.partitions", "4"))
 
   private def rm(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(rm))

@@ -56,4 +56,19 @@ class WorkDirSpec extends SparkTestBase {
     assert(live.exists() && new File(live, "fresh.bin").exists())
     assert(foreign.exists() && new File(foreign, "blob.bin").exists())
   }
+
+  test("removeTagged deletes one session's graft_ dirs and keeps " +
+      "other sessions' and dirs without the prefix") {
+    val root = new File(tempDir("workdir-spec"))
+    val own = mkdir(root, "graft_idx_app1")
+    mkfile(mkdir(own, "delta_1"), "blob.bin")
+    val ownKeyed = mkdir(root, "graft_stage_app1_7f3a")
+    val other = mkdir(root, "graft_idx_app2")
+    val foreign = mkdir(root, "other_app1")
+
+    WorkDir.removeTagged(root, "app1")
+
+    assert(!own.exists() && !ownKeyed.exists())
+    assert(other.exists() && foreign.exists())
+  }
 }

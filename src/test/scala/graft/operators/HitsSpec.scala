@@ -30,9 +30,9 @@ class HitsSpec extends SparkTestBase {
     nodes.map(n => n -> (hub(n), auth.getOrElse(n, 0L))).toMap
   }
 
-  private def run(es: Seq[(Long, Long)], iters: Int)
+  private def run(es: Seq[(Long, Long)], iters: Int, interval: Int = 5)
       : Map[Long, (Long, Long)] =
-    Hits.run(es.toDF("src", "dst"), iters)
+    Hits.run(es.toDF("src", "dst"), iters, checkpointInterval = interval)
       .as[(Long, Long, Long)].collect()
       .map(t => t._1 -> (t._2, t._3)).toMap
 
@@ -57,6 +57,14 @@ class HitsSpec extends SparkTestBase {
       assert(run(es, iters) == reference(es, iters, 1000000L),
         s"trial=$trial iters=$iters")
     }
+  }
+
+  test("checkpoint cadence is result-invariant") {
+    val rnd = new scala.util.Random(11)
+    val es = Seq.fill(60)((rnd.nextInt(18).toLong, rnd.nextInt(18).toLong))
+    val expected = reference(es, 5, 1000000L)
+    for (interval <- Seq(1, 2, 5))
+      assert(run(es, 5, interval) == expected, s"interval=$interval")
   }
 
   test("an edgeless side is rejected with a clear message") {

@@ -21,9 +21,10 @@ class KCoreSpec extends SparkTestBase {
     degrees(alive)
   }
 
-  private def run(es: Seq[(Long, Long)], k: Int, rounds: Int)
-      : Map[Long, Long] =
-    KCore.peel(es.toDF("src", "dst"), k, rounds)
+  private def run(es: Seq[(Long, Long)], k: Int, rounds: Int,
+                  interval: Int = 3): Map[Long, Long] =
+    KCore.peel(es.toDF("src", "dst"), k, rounds,
+        checkpointInterval = interval)
       .as[(Long, Long)].collect().toMap
 
   test("a clique survives 3-core peeling; its pendant tail does not") {
@@ -49,5 +50,13 @@ class KCoreSpec extends SparkTestBase {
       assert(run(es, k, rounds) == reference(es, k, rounds),
         s"trial=$trial k=$k rounds=$rounds")
     }
+  }
+
+  test("checkpoint cadence is result-invariant") {
+    val rnd = new scala.util.Random(5)
+    val es = Seq.fill(70)((rnd.nextInt(16).toLong, rnd.nextInt(16).toLong))
+    val expected = reference(es, 2, 6)
+    for (interval <- Seq(1, 2, 3))
+      assert(run(es, 2, 6, interval) == expected, s"interval=$interval")
   }
 }

@@ -25,8 +25,10 @@ class LabelPropSpec extends SparkTestBase {
     lab
   }
 
-  private def run(es: Seq[(Long, Long)], rounds: Int): Map[Long, Long] =
-    LabelProp.run(es.toDF("src", "dst"), rounds)
+  private def run(es: Seq[(Long, Long)], rounds: Int,
+                  interval: Int = 5): Map[Long, Long] =
+    LabelProp.run(es.toDF("src", "dst"), rounds,
+        checkpointInterval = interval)
       .as[(Long, Long)].collect().toMap
 
   test("two cliques joined by a bridge converge to two communities") {
@@ -59,5 +61,13 @@ class LabelPropSpec extends SparkTestBase {
       assert(run(es, rounds) == reference(es, rounds),
         s"trial=$trial rounds=$rounds")
     }
+  }
+
+  test("checkpoint cadence is result-invariant") {
+    val rnd = new scala.util.Random(7)
+    val es = Seq.fill(50)((rnd.nextInt(15).toLong, rnd.nextInt(15).toLong))
+    val expected = reference(es, 6)
+    for (interval <- Seq(1, 2, 5))
+      assert(run(es, 6, interval) == expected, s"interval=$interval")
   }
 }

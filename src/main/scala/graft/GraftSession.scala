@@ -12,8 +12,23 @@ import org.apache.spark.sql.SparkSession
   *   - auto broadcast threshold left at default (10 MB) — dims (TLD list,
   *     GeoIP ranges, region/nation) broadcast automatically; we also hint
   *     explicitly at call sites.
+  *   - a codegen cache of [[CodegenCacheEntries]] classes instead of
+  *     Spark's 100. Spark keys a compiled class on its source AND the
+  *     thread's context class loader, and in local mode the driver
+  *     thread and the executor's task threads use different loaders, so
+  *     every generated class is cached twice. One 2k-line daily delta
+  *     (Cleaner, Migrator, the three sinks, the index appends) uses
+  *     about 45 shapes, so about 90 entries: with 100 the cache evicted
+  *     its own working set, and each steady-state delta recompiled
+  *     83-96 classes. At 200 to 2000 entries that fell to 6-10 per delta
+  *     (4 cores, 2 GB heap). The setting is static, so it is set here,
+  *     before the first compile in the JVM.
   */
 object GraftSession {
+  /** Size of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`). */
+  val CodegenCacheEntries: Int = 1000
+
   /** The one parallelism knob: local[cpus] AND the static shuffle
     * partition count. Defaults to 32 — the driver's harness config.
     * Every main (Verify, Bench, the tools) must come through here: r16
@@ -34,6 +49,8 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toLong)
       // testdata events.ts is parquet TIMESTAMP(NANOS): read as long nanos
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.driver.host", "127.0.0.1")

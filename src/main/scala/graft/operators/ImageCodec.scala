@@ -51,13 +51,36 @@ object ImageCodec {
   val Grid = 8
   val FeatureDim: Int = Grid * Grid
 
-  /** Decode bytes with any registered ImageIO reader; null when no
-    * reader accepts the stream (audio/video/corrupt payloads). */
+  /** Largest image [[decodeImage]] decodes: 2^24 pixels (4096 x 4096,
+    * a 64 MB int-RGB raster). Readers allocate the raster from the
+    * header's claimed size before reading any pixel data, so without a
+    * cap a corrupt header claiming tens of thousands of pixels per side
+    * throws `OutOfMemoryError`. */
+  val MaxPixels: Long = 1L << 24
+
+  /** Decode bytes with the first registered ImageIO reader that accepts
+    * them (the reader `ImageIO.read` would pick); null when none does
+    * (audio/video/corrupt payloads), when decoding fails, or when the
+    * header claims more than [[MaxPixels]] pixels. Never throws. */
   def decodeImage(bytes: Array[Byte]): BufferedImage =
     if (bytes == null || bytes.length == 0) null
     else
-      try ImageIO.read(new ByteArrayInputStream(bytes)) // null if no reader
-      catch { case _: Exception => null }
+      try {
+        val in = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+        try {
+          val readers = ImageIO.getImageReaders(in)
+          if (!readers.hasNext) null
+          else {
+            val reader = readers.next()
+            try {
+              reader.setInput(in, true, true)
+              val pixels = reader.getWidth(0).toLong * reader.getHeight(0)
+              if (pixels <= 0 || pixels > MaxPixels) null
+              else reader.read(0, reader.getDefaultReadParam)
+            } finally reader.dispose()
+          }
+        } finally in.close()
+      } catch { case _: Exception => null }
 
   /** 64-dim 8x8 mean-luminance grid; null for undecodable payloads. */
   def decodeFeatures(bytes: Array[Byte]): Array[Float] = {

@@ -148,6 +148,6 @@ object PowerIteration {
           (mGuard + signum(col("raw")).cast("long") *
             expr(s"(abs(raw) * $vscale) div __m")).as("v"))
     }
-    Iterate.cut(v.select(col("j").as("i"), col("v")).orderBy("i"))
+    v.select(col("j").as("i"), col("v")).orderBy("i")
   }
 }

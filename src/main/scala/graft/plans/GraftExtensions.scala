@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, ExpressionInfo, Literal, ScalaUDF}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** Optimizer rule: rewrite the registered `is_valid_domain` Scala UDF
@@ -33,11 +34,31 @@ object RewriteValidatorUdf extends Rule[LogicalPlan] {
   * ad-hoc SQL plans the codegen'd expressions rather than UDF black
   * boxes: the domain validator plus the vector/hash hot-path family
   * (graft_dot, graft_lsh_sig, graft_minhash, graft_simhash).
+  *
+  * Also installs [[BindLiteralKeys]], which binds the primitive literal
+  * operands of comparisons in `FilterExec` conditions by reference
+  * ([[ParamLiteral]]), so a point read or keyset page with a new key
+  * does not compile a new class. It must never rewrite a scan's
+  * `dataFilters` or `partitionFilters`: Parquet pushdown translates
+  * only a `Literal`, and would silently drop a rewritten predicate.
+  * The rule is installed twice. As a pre-columnar-transition rule it
+  * runs before `CollapseCodegenStages` in the plain preparations, which
+  * plan a point read: that read has no exchange, so AQE never plans it.
+  * As a post-planner strategy rule it rewrites an adaptive plan before
+  * AQE keeps it as the initial plan, so the stages AQE builds from it
+  * share its nodes, and the columnar pass over each stage then finds
+  * nothing left to rewrite. A formatted explain numbers nodes by
+  * identity, so an adaptive plan rewritten only at stage creation
+  * would print its initial plan with new numbers.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.entries.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RewriteValidatorUdf)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = BindLiteralKeys
+    })
+    ext.injectQueryPostPlannerStrategyRule(_ => BindLiteralKeys)
   }
 }
 

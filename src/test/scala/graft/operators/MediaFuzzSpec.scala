@@ -85,6 +85,29 @@ class MediaFuzzSpec extends AnyFunSuite {
     assert(VideoCodec.parseAvi(corpus.find(_._1 == "avi_mjpg").get._2) != null)
   }
 
+  test("an image header claiming 40000 x 40000 pixels decodes to null " +
+      "without allocating its raster") {
+    // an 8-bit grayscale PNG whose one IDAT holds two pixels: a reader
+    // sizes its 1.6 GB raster from the header before inflating any data
+    def chunk(kind: String, data: Array[Byte]): Array[Byte] = {
+      val body = kind.getBytes("US-ASCII") ++ data
+      val crc = new java.util.zip.CRC32
+      crc.update(body)
+      java.nio.ByteBuffer.allocate(4).putInt(data.length).array ++ body ++
+        java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array
+    }
+    val png = hexBytes("89504E470D0A1A0A") ++
+      chunk("IHDR", hexBytes("00009C40 00009C40 08 00 00 00 00")) ++
+      chunk("IDAT", hexBytes("789C 6360 0000 0002 0001")) ++
+      chunk("IEND", Array.emptyByteArray)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val allocated = threads.getCurrentThreadAllocatedBytes
+    assert(ImageCodec.decodeImage(png) == null)
+    assert(ImageCodec.decodeFeatures(png) == null)
+    assert(threads.getCurrentThreadAllocatedBytes - allocated < (64L << 20))
+  }
+
   test("fuzz: random byte arrays never throw in any parser (600 cases)") {
     val gen = for {
       n <- Gen.chooseNum(0, 300)

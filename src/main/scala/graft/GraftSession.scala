@@ -16,7 +16,10 @@ import org.apache.spark.sql.SparkSession
   *     Spark's 100. Spark keys a compiled class on its source AND the
   *     thread's context class loader, and in local mode the driver
   *     thread and the executor's task threads use different loaders, so
-  *     every generated class is cached twice. One 2k-line daily delta
+  *     every generated class is cached twice. A collect that
+  *     [[graft.plans.DriverCollectExec]] runs on the driver thread
+  *     reuses the class compiled under the driver's loader, so such a
+  *     read's stage has one entry, not two. One 2k-line daily delta
   *     (Cleaner, Migrator, the three sinks, the index appends) uses
   *     about 45 shapes, so about 90 entries: with 100 the cache evicted
   *     its own working set, and each steady-state delta recompiled

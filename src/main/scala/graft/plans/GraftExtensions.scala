@@ -50,6 +50,18 @@ object RewriteValidatorUdf extends Rule[LogicalPlan] {
   * nothing left to rewrite. A formatted explain numbers nodes by
   * identity, so an adaptive plan rewritten only at stage creation
   * would print its initial plan with new numbers.
+  *
+  * Also installs [[CollectOnDriver]] as the columnar rule's
+  * post-transition rule, which runs after `EnsureRequirements` and
+  * before `CollapseCodegenStages`. It wraps an exchange-free plan root
+  * of scans, filters, projects and limits in [[DriverCollectExec]],
+  * whose `collect` runs the one input partition on the calling driver
+  * thread instead of as a Spark job. The gate is one input partition
+  * of at most `spark.sql.autoBroadcastJoinThreshold` bytes (`-1` turns
+  * it off) and a narrow lineage. Any other read, and any local run that
+  * throws, takes the job path, with its answers, errors and retries.
+  * A local run starts no job, so `cancelJobGroup` cannot interrupt it;
+  * the size gate bounds how long it runs.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -57,6 +69,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RewriteValidatorUdf)
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = BindLiteralKeys
+      override def postColumnarTransitions: Rule[SparkPlan] = CollectOnDriver
     })
     ext.injectQueryPostPlannerStrategyRule(_ => BindLiteralKeys)
   }

@@ -12,9 +12,11 @@ import graft.GraftSession
   * DataFrame, a separate never-executed QueryExecution, so every dump
   * showed `isFinalPlan=false`; this one shows the AQE-final plan with
   * runtime join/coalesce decisions), plus the executed run's job count
-  * from a SparkListener — the measurement the round optimizes. If no
-  * execution is captured (defensive), the static plan is dumped and
-  * the header says so.
+  * from a SparkListener — the measurement the round optimizes — and the
+  * number of collects inside the query that ran on the driver instead
+  * of as a job ([[graft.plans.DriverCollectExec]]), which explains a
+  * job count that fell. If no execution is captured (defensive), the
+  * static plan is dumped and the header says so.
   *
   * {{{ sbt "runMain graft.tools.PlanDump q_a,q_b <outDir> <suffix> [sfDir]" }}}
   */
@@ -69,12 +71,14 @@ object PlanDump {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     for (q <- names) {
       val j0 = jobCounter.get()
+      val l0 = graft.plans.DriverCollectExec.localRuns
       lastQe = null
       val t0 = System.nanoTime()
       val df = qs(q)(spark, sfDir)
       graft.Bench.force(df)
       val sec = (System.nanoTime() - t0) / 1e9
       val jobs = jobCounter.get() - j0
+      val local = graft.plans.DriverCollectExec.localRuns - l0
       settleQe()
       val executed = lastQe
       val (src, plan) =
@@ -87,10 +91,10 @@ object PlanDump {
             df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode))
       val body =
-        f"# $q ($suffix) — $src; run at $sfDir%s, $sec%.2f s (this run), $jobs jobs\n\n$plan"
+        f"# $q ($suffix) — $src; run at $sfDir%s, $sec%.2f s (this run), $jobs jobs, $local driver collects\n\n$plan"
       Files.write(Paths.get(outDir, s"${q}_$suffix.txt"),
         body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      println(f"[plan-dump] $q%-28s $sec%6.2f s $jobs%3d jobs -> $outDir/${q}_$suffix.txt")
+      println(f"[plan-dump] $q%-28s $sec%6.2f s $jobs%3d jobs $local%3d driver collects -> $outDir/${q}_$suffix.txt")
     }
     spark.stop()
   }
